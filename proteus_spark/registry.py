@@ -557,9 +557,9 @@ PRIORITY: tuple[str, ...] = (
     # new dispatch path end-to-end:
     "stream_cdf_export_roundtrip", "stream_compacted_bootstrap",
     "stream_view_dag_via_log",
-    # -- the rest of the r11-only streaming-view family (SumView/JoinView
-    # _merge_locked/_on_batch dispatch + replay-derived-skip changed this
-    # round; these drive those exact code paths under the oracle):
+    # -- the rest of the r11-only streaming-view family (the view core's
+    # commit path, _View._on_batch: dispatch + replay-derived-skip; these
+    # drive those exact code paths under the oracle):
     "stream_sum_view", "stream_sum_view_broker", "stream_sum_view_cdc",
     "stream_sum_view_deletes", "stream_sum_view_minilog",
     "stream_sum_view_timetravel", "stream_join_view",

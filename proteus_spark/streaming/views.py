@@ -4,9 +4,13 @@ Reference lifecycle (internal/qpu.go:33-75, sum.go:90-103, join.go:111-143):
 a stateful QPU subscribes to its upstream with snapshot+subscribe, replays
 STATE records into memory, flushes on END_OF_STREAM (catch-up), then applies
 UPDATEDELTA records forever, pushing notifications to subscribers; clients
-query the materialized state table.
+query the materialized state table. Every operator runs that one lifecycle
+and writes only its per-record apply.
 
-Spark shape used here:
+Spark shape used here — one view core (``_View``) with one lifecycle and
+one commit path; the view kinds (``SumView``, ``JoinView``,
+``HistoryView``) vary only the merge policy, the streaming writer and the
+batch->delta transform:
 
 - one Structured-Streaming query per view; Spark's state store replaces the
   reference's hand-rolled in-process maps (sum.go:49-59) — partitioned,
@@ -14,10 +18,10 @@ Spark shape used here:
 - ``foreachBatch`` appends each micro-batch's delta rows into a
   HASH-BUCKET-PARTITIONED LSM state table (``_BucketedState``): commits
   write O(|delta|) bytes full stop, reads collapse each bucket's
-  base+delta chain through the view's merge policy, and a bucket compacts
-  only when its pending deltas reach its base size (amortized O(delta)
-  maintenance) — the log-structured analogue of the reference's per-row
-  B-tree UPSERT sink
+  base+delta chain through the view's merge policy (replace, add,
+  coalesce or distinct), and a bucket compacts only when its pending
+  deltas reach its base size (amortized O(delta) maintenance) — the
+  log-structured analogue of the reference's per-row B-tree UPSERT sink
   (internal/qpustate/mysql_backend/mysql_backend.go:147-254), and the
   same shape as an Iceberg merge-on-read table with minor compaction.
   Version retention is bounded (last ``retain``); manifests map bucket ->
@@ -122,6 +126,17 @@ class _CoalesceMerge(_Merge):
                 for c in cols
             ],
         )
+
+
+class _DistinctMerge(_Merge):
+    """History/log state: rows are IMMUTABLE change records, so the
+    collapse keeps them all — it only drops the chain bookkeeping and
+    dedups exact replays (at-least-once replay safety). Idempotent under
+    compaction: a folded base is the distinct union of its chain, and
+    re-collapsing base + new deltas changes nothing already folded."""
+
+    def collapse(self, df: DataFrame, key: str) -> DataFrame:
+        return df.drop("_v").distinct()
 
 
 class _BucketedState:
@@ -245,11 +260,15 @@ class _BucketedState:
             )
         paths = self._paths(version, buckets)
         if not paths:
-            if self.schema is not None:
-                empty = self.spark.createDataFrame([], self.schema)
-                return self.merge.collapse(empty, self.key)
-            return None
+            return self._empty()
         return self.merge.collapse(self._read_raw(paths), self.key)
+
+    def _empty(self) -> DataFrame | None:
+        """The collapsed empty state; None while no schema is known."""
+        if self.schema is None:
+            return None
+        empty = self.spark.createDataFrame([], self.schema)
+        return self.merge.collapse(empty, self.key)
 
     # -- writes ------------------------------------------------------------
     def _dir_bytes(self, path: str) -> int:
@@ -498,17 +517,8 @@ class _BucketedState:
         null-valued rows with ``_deleted = 1`` — a catch-up that dropped
         deletions would leave the consumer's mirror holding dead keys
         forever."""
-
-        def _with_flag(df: DataFrame) -> DataFrame:
-            return df.withColumn("_deleted", F.lit(0))
-
         cur = self.version
-        if cur < 0 or since_version >= cur:
-            if self.schema is not None:
-                empty = self.spark.createDataFrame([], self.schema)
-                return _with_flag(self.merge.collapse(empty, self.key))
-            return None
-        m = self.manifests[cur]
+        m = self.manifests[cur] if 0 <= cur and since_version < cur else {}
         paths = [
             self._bdir(v, b)
             for b, chain in m.items()
@@ -516,13 +526,15 @@ class _BucketedState:
             if v > since_version
         ]
         if not paths:
-            if self.schema is None:
+            empty = self._empty()
+            if empty is None:
                 return None
-            empty = self.spark.createDataFrame([], self.schema)
-            return _with_flag(self.merge.collapse(empty, self.key))
+            return empty.withColumn("_deleted", F.lit(0))
         touched = self._read_raw(paths).select(self.key).distinct()
         full = self.read()
-        live = _with_flag(full.join(touched, self.key, "left_semi"))
+        live = full.join(touched, self.key, "left_semi").withColumn(
+            "_deleted", F.lit(0)
+        )
         gone = touched.join(full.select(self.key), self.key, "left_anti")
         for f in live.schema.fields:
             if f.name not in (self.key, "_deleted"):
@@ -557,138 +569,83 @@ class _BucketedState:
         )
 
 
-def _dispatch_subscribers(
-    subscribers: list[tuple[Callable[[DataFrame, int], None], bool]],
-    delta: DataFrame,
-    epoch: int,
-) -> None:
-    """Per-micro-batch subscriber fan-out, shared by SumView and JoinView.
+class _View:
+    """The one view core: the stateful-QPU lifecycle every view kind runs
+    (qpu.go:72-75 — start, catch-up gate, then deltas forever), its one
+    per-batch commit path and its query surface. A view kind supplies only
+    what the reference's operators write themselves (sum.go:90-103): its
+    merge policy (passed in), its streaming writer (``_writer``), its
+    batch->delta transform (``_delta``) and an optional post-commit step
+    (``_after_commit``).
 
-    A DURABLE subscriber's exception propagates — the micro-batch fails,
-    the streaming query stops, and a restart replays the epoch: the state
-    commit is then skipped (exactly-once) while dispatch re-runs
-    (at-least-once), so an idempotent exporter completes the publication
-    it lost. Swallowing such an exception instead would let Spark
-    checkpoint the epoch with the export incomplete — permanently missing
-    from the feed (ADVICE r13). Best-effort observers keep the swallow:
-    their failures must not kill the view.
-
-    EVERY subscriber is dispatched before a durable failure re-raises
-    (review r14 #2): aborting the loop mid-way would starve the
-    subscribers registered after the failing one — in-process observers
-    have no replay to catch them up, so the one-callback-per-version
-    counting they rely on would silently break."""
-    durable_err: Exception | None = None
-    for cb, durable in list(subscribers):
-        try:
-            cb(delta, epoch)
-        except Exception as exc:
-            if durable and durable_err is None:
-                durable_err = exc
-            # observer errors must not kill the view; a durable error
-            # still lets the rest of the fan-out run first
-    if durable_err is not None:
-        raise durable_err
-
-
-class SumView:
-    """Streaming GROUP-BY-SUM materialized view (SumQPU parity, SURVEY §2.4).
-
-    Two input shapes:
-
-    - mode='append': plain insert stream; Spark's streaming aggregation
-      (update output mode) maintains running totals in the state store and
-      emits only changed groups per batch — exactly the incremental
-      semantics of sum.go:250-285, minus the races.
-    - mode='cdc': UPDATEDELTA records (old_value/new_value); each batch's
-      per-group contribution = sum(coalesce(new,0) - coalesce(old,0)) is
-      added to the state table (delta application parity, sum.go:250-285).
-      DELETE records (old image, no new) therefore subtract — the
-      generalization the reference's sum QPU never shipped.
-
-    Output column is ``<attr>_sum`` (sum.go:158-160). State maintenance is
-    O(|delta| + |touched buckets|) per batch via ``_BucketedState``.
+    ``root`` pins the state+checkpoint location so the view can be
+    STOPPED AND RESTARTED in place — the new instance recovers the LSM
+    manifest (including the exactly-once epoch high-water mark) and
+    Spark's checkpoint resumes the source offsets; a batch that committed
+    to state but not to the offset log is re-delivered and deduped by the
+    epoch guard. Default: fresh temp dir per view.
     """
 
     def __init__(
         self,
         spark: SparkSession,
-        stream: DataFrame,
-        group_by: str,
-        agg_attr: str = "new_value",
-        name: str = "sum_view",
-        mode: str = "append",
-        derived: dict[str, Callable[[DataFrame], DataFrame]] | None = None,
-        n_buckets: int = 32,
-        retain: int = 8,
-        root: str | None = None,
+        stream: DataFrame | None,
+        key: str,
+        merge: _Merge,
+        name: str,
+        n_buckets: int,
+        retain: int,
+        root: str | None,
     ):
         self.spark = spark
         self.name = name
-        self.group_by = group_by
-        self.agg_attr = agg_attr
-        self.sum_col = f"{agg_attr}_sum"
-        self.mode = mode
-        self.derived = derived or {}
         self._stream = stream
-        # ``root``: pin the state+checkpoint location so the view can be
-        # STOPPED AND RESTARTED in place — the new instance recovers the
-        # LSM manifest (including the exactly-once epoch high-water mark)
-        # and Spark's checkpoint resumes the source offsets; a batch that
-        # committed to state but not to the offset log is re-delivered and
-        # deduped by the epoch guard. Default: fresh temp dir per view.
         self._root = root or tempfile.mkdtemp(prefix=f"proteus_view_{name}_")
         os.makedirs(self._root, exist_ok=True)
         self._ckpt = os.path.join(self._root, "_checkpoint")
-        # append mode: update-mode agg emits NEW totals -> latest row wins;
-        # cdc mode: raw contributions -> running sum (commutative)
-        merge = (
-            _ReplaceMerge()
-            if mode == "append"
-            else _AddMerge(sum_col=self.sum_col)
-        )
         self._state = _BucketedState(
-            spark, self._root, key=group_by, merge=merge,
+            spark, self._root, key=key, merge=merge,
             n_buckets=n_buckets, retain=retain,
         )
         if root is not None:
             self._state.recover()
-        self._retain = retain
         self._snap_lock = threading.Lock()
         self._batch_lock = threading.Lock()
         self._stopped = False
         self._snap_cache = None
         self._snap_version = -1
-        self._derived_version: dict[str, int] = {}
         # (callback, durable) pairs — see subscribe() for the contract
         self._subscribers: list[
             tuple[Callable[[DataFrame, int], None], bool]
         ] = []
         self._query = None
 
-    # -- lifecycle ---------------------------------------------------------
-    def start(self) -> "SumView":
-        if self.mode == "append":
-            agg = self._stream.groupBy(self.group_by).agg(
-                F.sum(self.agg_attr).alias(self.sum_col)
-            )
-            writer = agg.writeStream.outputMode("update").foreachBatch(
-                self._on_changed_groups
-            )
-        elif self.mode == "cdc":
-            writer = self._stream.writeStream.outputMode("append").foreachBatch(
-                self._on_cdc_batch
-            )
-        else:
-            raise ValueError(f"unknown mode {self.mode!r}")
+    # -- per-kind hooks ------------------------------------------------------
+    def _writer(self):
+        """The streaming writer feeding ``_on_batch``: raw input rows,
+        append output mode."""
+        return self._stream.writeStream.outputMode("append").foreachBatch(
+            self._on_batch
+        )
+
+    def _delta(self, batch: DataFrame) -> DataFrame:
+        """Batch -> the rows to commit (no ``_bucket`` yet)."""
+        return batch
+
+    def _after_commit(self, prev_v: int, new_v: int) -> None:
+        """Runs after the state commit, before subscriber dispatch."""
+
+    # -- lifecycle -----------------------------------------------------------
+    def start(self):
         self._query = (
-            writer.option("checkpointLocation", self._ckpt)
+            self._writer()
+            .option("checkpointLocation", self._ckpt)
             .queryName(self.name)
             .start()
         )
         return self
 
-    def await_catch_up(self) -> "SumView":
+    def await_catch_up(self):
         """Serve-gate parity (qpu.go:72-75): block until the snapshot replay
         (all currently-available input) is committed."""
         self._query.processAllAvailable()
@@ -702,7 +659,13 @@ class SumView:
         (VERDICT r12 #1: the test-side latch-then-read left a window
         where a mid-flight commit landed between the two). Unlike
         stop(), the materialized snapshot stays readable; call stop()
-        afterwards for teardown (idempotent)."""
+        afterwards for teardown (idempotent).
+
+        Taking the lock also joins the in-flight foreachBatch: a callback
+        dispatched just before query.stop() but not yet at the lock
+        acquires it after us, sees the flag, and returns without
+        committing — so a late callback never commits into the root
+        stop() removes."""
         if self._query is not None:
             self._query.stop()
         with self._batch_lock:
@@ -710,14 +673,9 @@ class SumView:
             return self._state.version
 
     def stop(self, cleanup: bool = True) -> None:
-        if self._query is not None:
-            self._query.stop()
-        # join the in-flight foreachBatch AND latch _stopped under the same
-        # lock: a callback dispatched just before query.stop() but not yet
-        # at the lock acquires it after us, sees the flag, and returns
-        # without committing — post-stop state is final either way
-        with self._batch_lock:
-            self._stopped = True
+        """Teardown: freeze, release the snapshot memo and (``cleanup``)
+        remove the root. Idempotent."""
+        self.freeze()
         with self._snap_lock:
             if self._snap_cache is not None:
                 try:
@@ -728,31 +686,16 @@ class SumView:
         if cleanup:
             shutil.rmtree(self._root, ignore_errors=True)
 
-    # -- state maintenance ---------------------------------------------------
-    def _on_changed_groups(self, batch: DataFrame, epoch: int) -> None:
-        """update-mode aggregation hands us the changed groups with their
-        NEW totals (state store did the math) -> MERGE = replace keys."""
-        self._merge(batch, epoch=epoch)
+    # -- the one commit path -------------------------------------------------
+    def _on_batch(self, batch: DataFrame, epoch: int) -> None:
+        """foreachBatch hook: latch, delta, checkpoint (subscribers only),
+        commit, post-commit step, dispatch, release.
 
-    def _on_cdc_batch(self, batch: DataFrame, epoch: int) -> None:
-        """raw UPDATEDELTA rows -> per-group contribution -> MERGE-add.
-        DELETEs (new_value NULL, old_value set) contribute -old. An input
-        ``_ts`` vector-clock column (see sources.cdc.attach_source_ts)
-        carries through as the group's freshness: max over applied deltas
-        (the reference folds per-record Vectorclocks the same way when it
-        stamps state rows, qpu.proto:97-99)."""
-        aggs = [
-            F.sum(
-                F.coalesce(F.col("new_value"), F.lit(0.0))
-                - F.coalesce(F.col("old_value"), F.lit(0.0))
-            ).alias(self.sum_col)
-        ]
-        if "_ts" in batch.columns:
-            aggs.append(F.max("_ts").alias("_ts"))
-        contrib = batch.groupBy(self.group_by).agg(*aggs)
-        self._merge(contrib, epoch=epoch)
-
-    def _merge(self, delta: DataFrame, epoch: int) -> None:
+        LSM append: the commit writes ONLY the delta rows — no
+        read-modify-write of existing state on the hot path (the merge
+        policy runs on read / at per-bucket compaction), and ONE Spark job
+        per batch (the commit derives touched buckets from its own write;
+        replayed epochs are skipped — exactly-once for additive merges)."""
         # batch-in-flight guard: stop() barriers on this lock, so a
         # caller that returned from stop() can never observe a version
         # bump or subscriber callback landing afterwards (the round-8
@@ -762,89 +705,74 @@ class SumView:
         with self._batch_lock:
             if self._stopped:
                 return
-            self._merge_locked(delta, epoch)
-
-    def _merge_locked(self, delta: DataFrame, epoch: int) -> None:
-        # merge POLICY lives in the _state.merge object chosen at
-        # construction (replace / add / coalesce) — not a per-call flag.
-        # LSM append: write ONLY the delta rows — no read-modify-write of
-        # existing state on the hot path (merge happens on read / at
-        # per-bucket compaction), and ONE Spark job per batch (the commit
-        # derives touched buckets from its own write; replayed epochs are
-        # skipped — exactly-once for the additive CDC merge)
-        delta = delta.withColumn("_bucket", self._state.bucket_col())
-        # With subscribers registered, the delta plan would otherwise
-        # EXECUTE TWICE per batch — once for the state commit's write and
-        # once when the dispatch fan-out's consumers act on it (for an
-        # update-mode aggregation that is the whole agg + state-store pass
-        # again; measured ~2x the batch cost on the CDF-export views,
-        # optimization r16 / guide §1). One eager localCheckpoint makes
-        # the commit write and every subscriber read the same materialized
-        # blocks; released deterministically after the fan-out (consumers
-        # act synchronously inside their callback — the subscribe()
-        # contract). Views without subscribers keep the single-job shape.
-        _ckpt = None
-        if self._subscribers:
-            delta = delta.localCheckpoint(eager=True)
-            _ckpt = delta
-        # NOTE: a replayed epoch (commit_delta returns an unchanged
-        # version) still falls through to subscriber dispatch
-        # DELIBERATELY — downstream delivery is AT-LEAST-ONCE.
-        # A crash between the state's manifest persist and a subscriber's
-        # own commit point (e.g. minilog.append_epoch's atomic marker)
-        # leaves the export incomplete; on restart foreachBatch re-delivers
-        # the epoch, the state commit is skipped (exactly-once), and the
-        # re-dispatched subscriber completes its idempotent publication —
-        # the marker-keyed replay guard in append_epoch depends on being
-        # re-invoked (review r13 #1). Replays only occur across restarts,
-        # so in-process callback counting (one per version) is unaffected.
-        # Derived views, by contrast, recompute FROM the committed state —
-        # an IN-PROCESS replay that did not advance the version has
-        # nothing new to derive, so the recompute (and its version bump +
-        # retention delete) is skipped: re-running it only burned Spark
-        # jobs and drifted _derived_version ahead of the state version
-        # (ADVICE r14). EXCEPT when this instance has not produced the
-        # derived view at all (_derived_version is in-memory and resets on
-        # restart): a post-restart replayed epoch must still recompute, or
-        # a crash between the state commit and the derived write would
-        # leave the derived view permanently unavailable (review r14 #1 —
-        # the crash-repair duty the pre-r14 always-recompute carried).
-        try:
-            prev_v = self._state.version
-            new_v = self._state.commit_delta(delta, epoch=epoch)
-
-            # downstream QPUs: recompute derived views over the committed
-            # state (None until the first non-empty batch commits a schema
-            # — an empty first micro-batch must not crash the query).
-            # Snapshot resolution is only paid when a derived view will
-            # consume it (optimization r16, guide §1): with no derived views
-            # the per-batch read.parquet resolution + persist/unpersist churn
-            # served nobody — readers memoize their own snapshot per version.
-            state = self.snapshot() if self.derived else None
-            for name, fn in self.derived.items() if state is not None else ():
-                if new_v == prev_v and name in self._derived_version:
-                    continue  # in-process replay, derived already current
-                out = fn(state)
-                dv = self._derived_version.get(name, -1) + 1
-                out.write.mode("overwrite").parquet(
-                    os.path.join(self._root, f"{name}_v{dv}")
-                )
-                self._derived_version[name] = dv
-                old = dv - self._retain
-                if old >= 0:
-                    shutil.rmtree(
-                        os.path.join(self._root, f"{name}_v{old}"),
-                        ignore_errors=True,
-                    )
-
-            _dispatch_subscribers(
-                self._subscribers, delta.drop("_bucket"), epoch
+            delta = self._delta(batch).withColumn(
+                "_bucket", self._state.bucket_col()
             )
-        finally:
-            if _ckpt is not None:
-                from proteus_spark.plans.ckpt import release
+            # With subscribers registered, the delta plan would otherwise
+            # EXECUTE TWICE per batch — once for the state commit's write
+            # and once when the dispatch fan-out's consumers act on it (for
+            # an update-mode aggregation that is the whole agg + state-store
+            # pass again; measured ~2x the batch cost on the CDF-export
+            # views, optimization r16 / guide §1). One eager localCheckpoint
+            # makes the commit write and every subscriber read the same
+            # materialized blocks; released deterministically after the
+            # fan-out (consumers act synchronously inside their callback —
+            # the subscribe() contract). Views without subscribers keep the
+            # single-job shape.
+            ckpt = None
+            if self._subscribers:
+                delta = ckpt = delta.localCheckpoint(eager=True)
+            # NOTE: a replayed epoch (commit_delta returns an unchanged
+            # version) still falls through to subscriber dispatch
+            # DELIBERATELY — downstream delivery is AT-LEAST-ONCE.
+            # A crash between the state's manifest persist and a
+            # subscriber's own commit point (e.g. minilog.append_epoch's
+            # atomic marker) leaves the export incomplete; on restart
+            # foreachBatch re-delivers the epoch, the state commit is
+            # skipped (exactly-once), and the re-dispatched subscriber
+            # completes its idempotent publication — the marker-keyed
+            # replay guard in append_epoch depends on being re-invoked
+            # (review r13 #1). Replays only occur across restarts, so
+            # in-process callback counting (one per version) is unaffected.
+            try:
+                prev_v = self._state.version
+                new_v = self._state.commit_delta(delta, epoch=epoch)
+                self._after_commit(prev_v, new_v)
+                self._dispatch_subscribers(delta.drop("_bucket"), epoch)
+            finally:
+                if ckpt is not None:
+                    from proteus_spark.plans.ckpt import release
 
-                release(_ckpt)
+                    release(ckpt)
+
+    def _dispatch_subscribers(self, delta: DataFrame, epoch: int) -> None:
+        """Per-micro-batch subscriber fan-out.
+
+        A DURABLE subscriber's exception propagates — the micro-batch fails,
+        the streaming query stops, and a restart replays the epoch: the state
+        commit is then skipped (exactly-once) while dispatch re-runs
+        (at-least-once), so an idempotent exporter completes the publication
+        it lost. Swallowing such an exception instead would let Spark
+        checkpoint the epoch with the export incomplete — permanently missing
+        from the feed (ADVICE r13). Best-effort observers keep the swallow:
+        their failures must not kill the view.
+
+        EVERY subscriber is dispatched before a durable failure re-raises
+        (review r14 #2): aborting the loop mid-way would starve the
+        subscribers registered after the failing one — in-process observers
+        have no replay to catch them up, so the one-callback-per-version
+        counting they rely on would silently break."""
+        durable_err: Exception | None = None
+        for cb, durable in list(self._subscribers):
+            try:
+                cb(delta, epoch)
+            except Exception as exc:
+                if durable and durable_err is None:
+                    durable_err = exc
+                # observer errors must not kill the view; a durable error
+                # still lets the rest of the fan-out run first
+        if durable_err is not None:
+            raise durable_err
 
     # -- query surface -------------------------------------------------------
     def snapshot(self) -> DataFrame | None:
@@ -868,12 +796,6 @@ class SumView:
                 if old is not None:
                     old.unpersist()
             return self._snap_cache
-
-    def snapshot_derived(self, name: str) -> DataFrame | None:
-        dv = self._derived_version.get(name, -1)
-        if dv < 0:
-            return None
-        return self.spark.read.parquet(os.path.join(self._root, f"{name}_v{dv}"))
 
     def subscribe(
         self, cb: Callable[[DataFrame, int], None], durable: bool = False
@@ -907,7 +829,7 @@ class SumView:
 
     def changes_since(self, version: int) -> DataFrame | None:
         """Catch-up subscribe from a version bound: current rows of every
-        group touched after ``version`` (at-least-once; see
+        key touched after ``version`` (at-least-once; see
         _BucketedState.changes_since). The [v, INF) tsPredicate."""
         return self._state.changes_since(version)
 
@@ -927,7 +849,139 @@ class SumView:
         return df
 
 
-class JoinView:
+class SumView(_View):
+    """Streaming GROUP-BY-SUM materialized view (SumQPU parity, SURVEY §2.4).
+
+    Two input shapes:
+
+    - mode='append': plain insert stream; Spark's streaming aggregation
+      (update output mode) maintains running totals in the state store and
+      emits only changed groups per batch — exactly the incremental
+      semantics of sum.go:250-285, minus the races.
+    - mode='cdc': UPDATEDELTA records (old_value/new_value); each batch's
+      per-group contribution = sum(coalesce(new,0) - coalesce(old,0)) is
+      added to the state table (delta application parity, sum.go:250-285).
+      DELETE records (old image, no new) therefore subtract — the
+      generalization the reference's sum QPU never shipped.
+
+    Output column is ``<attr>_sum`` (sum.go:158-160). State maintenance is
+    O(|delta| + |touched buckets|) per batch via ``_BucketedState``.
+    ``derived`` views (the downstream QPUs) recompute from the committed
+    state after each commit.
+    """
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        stream: DataFrame,
+        group_by: str,
+        agg_attr: str = "new_value",
+        name: str = "sum_view",
+        mode: str = "append",
+        derived: dict[str, Callable[[DataFrame], DataFrame]] | None = None,
+        n_buckets: int = 32,
+        retain: int = 8,
+        root: str | None = None,
+    ):
+        self.group_by = group_by
+        self.agg_attr = agg_attr
+        self.sum_col = f"{agg_attr}_sum"
+        self.mode = mode
+        self.derived = derived or {}
+        self._derived_version: dict[str, int] = {}
+        # append mode: update-mode agg emits NEW totals -> latest row wins;
+        # cdc mode: raw contributions -> running sum (commutative)
+        merge = (
+            _ReplaceMerge()
+            if mode == "append"
+            else _AddMerge(sum_col=self.sum_col)
+        )
+        super().__init__(
+            spark, stream, group_by, merge, name, n_buckets, retain, root
+        )
+
+    def _writer(self):
+        if self.mode == "cdc":
+            return super()._writer()
+        if self.mode != "append":
+            raise ValueError(f"unknown mode {self.mode!r}")
+        agg = self._stream.groupBy(self.group_by).agg(
+            F.sum(self.agg_attr).alias(self.sum_col)
+        )
+        return agg.writeStream.outputMode("update").foreachBatch(
+            self._on_batch
+        )
+
+    def _delta(self, batch: DataFrame) -> DataFrame:
+        """append: update-mode aggregation hands us the changed groups with
+        their NEW totals (the state store did the math) -> commit as is,
+        the replace merge keeps the newest row.
+
+        cdc: raw UPDATEDELTA rows -> per-group contribution -> add merge.
+        DELETEs (new_value NULL, old_value set) contribute -old. An input
+        ``_ts`` vector-clock column (see sources.cdc.attach_source_ts)
+        carries through as the group's freshness: max over applied deltas
+        (the reference folds per-record Vectorclocks the same way when it
+        stamps state rows, qpu.proto:97-99)."""
+        if self.mode == "append":
+            return batch
+        aggs = [
+            F.sum(
+                F.coalesce(F.col("new_value"), F.lit(0.0))
+                - F.coalesce(F.col("old_value"), F.lit(0.0))
+            ).alias(self.sum_col)
+        ]
+        if "_ts" in batch.columns:
+            aggs.append(F.max("_ts").alias("_ts"))
+        return batch.groupBy(self.group_by).agg(*aggs)
+
+    # the foreachBatch entry point under the name of the input it takes
+    _on_changed_groups = _on_cdc_batch = _View._on_batch
+
+    def _after_commit(self, prev_v: int, new_v: int) -> None:
+        """Downstream QPUs: recompute derived views over the committed
+        state (None until the first non-empty batch commits a schema — an
+        empty first micro-batch must not crash the query). Snapshot
+        resolution is only paid when a derived view will consume it
+        (optimization r16, guide §1): with no derived views the per-batch
+        read.parquet resolution + persist/unpersist churn served nobody —
+        readers memoize their own snapshot per version.
+
+        Derived views recompute FROM the committed state — an IN-PROCESS
+        replay that did not advance the version has nothing new to derive,
+        so the recompute (and its version bump + retention delete) is
+        skipped: re-running it only burned Spark jobs and drifted
+        _derived_version ahead of the state version (ADVICE r14). EXCEPT
+        when this instance has not produced the derived view at all
+        (_derived_version is in-memory and resets on restart): a
+        post-restart replayed epoch must still recompute, or a crash
+        between the state commit and the derived write would leave the
+        derived view permanently unavailable (review r14 #1)."""
+        state = self.snapshot() if self.derived else None
+        for name, fn in self.derived.items() if state is not None else ():
+            if new_v == prev_v and name in self._derived_version:
+                continue  # in-process replay, derived already current
+            out = fn(state)
+            dv = self._derived_version.get(name, -1) + 1
+            out.write.mode("overwrite").parquet(
+                os.path.join(self._root, f"{name}_v{dv}")
+            )
+            self._derived_version[name] = dv
+            old = dv - self._state.retain
+            if old >= 0:
+                shutil.rmtree(
+                    os.path.join(self._root, f"{name}_v{old}"),
+                    ignore_errors=True,
+                )
+
+    def snapshot_derived(self, name: str) -> DataFrame | None:
+        dv = self._derived_version.get(name, -1)
+        if dv < 0:
+            return None
+        return self.spark.read.parquet(os.path.join(self._root, f"{name}_v{dv}"))
+
+
+class JoinView(_View):
     """Streaming keyed-merge JOIN view (JoinQPU parity, SURVEY §2.3).
 
     Reference semantics (join.go:302-350,352-379,393-456): exactly two
@@ -941,10 +995,10 @@ class JoinView:
     columns -> NULL), so ONE streaming query maintains the state — no
     cross-stream race, strictly stronger than the reference's
     goroutine-per-record apply. Each micro-batch collapses to one row per
-    key (last non-null value per column), then MERGEs into the bucketed
-    state table with per-column coalesce(batch, state, default) — only
-    buckets containing arrived keys rewrite (O(delta) maintenance, the
-    MERGE INTO contract; see ``_BucketedState``).
+    key (last non-null value per column) and commits as an LSM delta; the
+    coalesce merge resolves per-column last-writer-wins and DELETE
+    tombstones (rows with ``_op=DELETE``, kept until their bucket
+    compacts) on read.
     """
 
     def __init__(
@@ -960,8 +1014,6 @@ class JoinView:
         root: str | None = None,
         order_col: str | None = None,
     ):
-        self.spark = spark
-        self.name = name
         self.key = key
         self.defaults = defaults or {}
         # ``order_col``: when the transport supplies a per-key total order
@@ -972,78 +1024,15 @@ class JoinView:
         # rate-limited log consumer pulling multiple exported epochs at
         # once). The column is consumed by the collapse and never stored.
         self.order_col = order_col
-        self._stream = left.unionByName(right, allowMissingColumns=True)
-        # root pins state+checkpoint for restart-in-place (see SumView)
-        self._root = root or tempfile.mkdtemp(prefix=f"proteus_view_{name}_")
-        os.makedirs(self._root, exist_ok=True)
-        self._ckpt = os.path.join(self._root, "_checkpoint")
-        self._state = _BucketedState(
-            spark, self._root, key=key,
-            merge=_CoalesceMerge(defaults=self.defaults),
-            n_buckets=n_buckets, retain=retain,
+        super().__init__(
+            spark,
+            left.unionByName(right, allowMissingColumns=True),
+            key,
+            _CoalesceMerge(defaults=self.defaults),
+            name, n_buckets, retain, root,
         )
-        if root is not None:
-            self._state.recover()
-        # (callback, durable) pairs — see SumView.subscribe for the contract
-        self._subscribers: list[
-            tuple[Callable[[DataFrame, int], None], bool]
-        ] = []
-        self._snap_lock = threading.Lock()
-        self._batch_lock = threading.Lock()
-        self._stopped = False
-        self._snap_cache = None
-        self._snap_version = -1
-        self._query = None
 
-    def start(self) -> "JoinView":
-        self._query = (
-            self._stream.writeStream.outputMode("append")
-            .foreachBatch(self._on_batch)
-            .option("checkpointLocation", self._ckpt)
-            .queryName(self.name)
-            .start()
-        )
-        return self
-
-    def await_catch_up(self) -> "JoinView":
-        """Serve-gate parity (qpu.go:72-75)."""
-        self._query.processAllAvailable()
-        return self
-
-    def freeze(self) -> int:
-        """Latch read-only and return the frozen version in one critical
-        section (see SumView.freeze); the snapshot stays readable."""
-        if self._query is not None:
-            self._query.stop()
-        with self._batch_lock:
-            self._stopped = True
-            return self._state.version
-
-    def stop(self, cleanup: bool = True) -> None:
-        if self._query is not None:
-            self._query.stop()
-        # join the in-flight foreachBatch AND latch _stopped under the
-        # same lock (see SumView.stop): post-stop state is final
-        with self._batch_lock:
-            self._stopped = True
-        with self._snap_lock:
-            if self._snap_cache is not None:
-                try:
-                    self._snap_cache.unpersist()
-                except Exception:
-                    pass  # session may already be closing
-                self._snap_cache = None
-        if cleanup:
-            shutil.rmtree(self._root, ignore_errors=True)
-
-    # -- state maintenance -------------------------------------------------
-    def _on_batch(self, batch: DataFrame, epoch: int) -> None:
-        with self._batch_lock:  # stop() barriers on this (see SumView)
-            if self._stopped:
-                return
-            self._on_batch_locked(batch, epoch)
-
-    def _on_batch_locked(self, batch: DataFrame, epoch: int) -> None:
+    def _delta(self, batch: DataFrame) -> DataFrame:
         has_op = "_op" in batch.columns
         cols = [
             c
@@ -1083,96 +1072,10 @@ class JoinView:
             aggs = [F.last(c, ignorenulls=True).alias(c) for c in cols]
             if has_op:
                 aggs.append(F.last("_op", ignorenulls=False).alias("_op"))
-        delta = (
-            batch.groupBy(self.key)
-            .agg(*aggs)
-            .withColumn("_bucket", self._state.bucket_col())
-        )
-        # one execution per batch even with subscribers registered — see
-        # SumView._merge_locked (the commit write and the dispatch fan-out
-        # otherwise each run the batch-collapse plan)
-        _ckpt = None
-        if self._subscribers:
-            delta = delta.localCheckpoint(eager=True)
-            _ckpt = delta
-        # LSM append: delta rows only (tombstones persist as rows with
-        # _op=DELETE until their bucket compacts); the coalesce merge
-        # resolves per-column last-writer-wins + deletes on read; one
-        # Spark job per batch (touched buckets come from the commit's
-        # own write); replayed epochs are skipped
-        # replayed epochs skip the state commit but still re-notify:
-        # downstream delivery is at-least-once so idempotent exporters can
-        # complete a crash-interrupted publication (see SumView._merge_locked)
-        try:
-            self._state.commit_delta(delta, epoch=epoch)
-            _dispatch_subscribers(
-                self._subscribers, delta.drop("_bucket"), epoch
-            )
-        finally:
-            if _ckpt is not None:
-                from proteus_spark.plans.ckpt import release
-
-                release(_ckpt)
-
-    # -- query surface -----------------------------------------------------
-    def snapshot(self) -> DataFrame | None:
-        """Collapsed state, memoized per version (see SumView.snapshot)."""
-        with self._snap_lock:
-            v = self._state.version
-            if v != self._snap_version:
-                new = self._state.read()
-                old = self._snap_cache
-                self._snap_cache = new.persist() if new is not None else None
-                self._snap_version = v
-                if old is not None:
-                    old.unpersist()
-            return self._snap_cache
-
-    def subscribe(
-        self, cb: Callable[[DataFrame, int], None], durable: bool = False
-    ) -> None:
-        """Per-micro-batch delta callback; ``durable=True`` for
-        durability-bearing subscribers — see SumView.subscribe."""
-        self._subscribers.append((cb, durable))
-
-    def unsubscribe(self, cb: Callable[[DataFrame, int], None]) -> None:
-        """Remove a subscriber (idempotent); see SumView.unsubscribe."""
-        for i, (fn, _durable) in enumerate(self._subscribers):
-            if fn == cb:
-                del self._subscribers[i]
-                break
-
-    def version(self) -> int:
-        return self._state.version
-
-    def changes_since(self, version: int) -> DataFrame | None:
-        """Catch-up from a version bound (see SumView.changes_since)."""
-        return self._state.changes_since(version)
-
-    def snapshot_at(self, version: int) -> DataFrame:
-        """Time-travel read (see SumView.snapshot_at)."""
-        if not 0 <= version <= self._state.version:
-            raise ValueError(
-                f"version {version} out of range [0, {self._state.version}]"
-            )
-        df = self._state.read(version=version)
-        if df is None:
-            raise ValueError(f"version {version} has no committed state")
-        return df
+        return batch.groupBy(self.key).agg(*aggs)
 
 
-class _DistinctMerge(_Merge):
-    """History/log state: rows are IMMUTABLE change records, so the
-    collapse keeps them all — it only drops the chain bookkeeping and
-    dedups exact replays (at-least-once replay safety). Idempotent under
-    compaction: a folded base is the distinct union of its chain, and
-    re-collapsing base + new deltas changes nothing already folded."""
-
-    def collapse(self, df: DataFrame, key: str) -> DataFrame:
-        return df.drop("_v").distinct()
-
-
-class HistoryView:
+class HistoryView(_View):
     """Streaming SCD2 history view: every change record for a key is
     retained, and reads surface slowly-changing-dimension rows with
     validity intervals ([valid_from, valid_to) by the change's event-time
@@ -1205,64 +1108,13 @@ class HistoryView:
         retain: int = 8,
         root: str | None = None,
     ):
-        self.spark = spark
-        self.name = name
         self.key = key
         self.order_col = order_col
         self.id_col = id_col
-        self._stream = stream
-        # root pins state+checkpoint for restart-in-place (see SumView)
-        self._root = root or tempfile.mkdtemp(prefix=f"proteus_view_{name}_")
-        os.makedirs(self._root, exist_ok=True)
-        self._ckpt = os.path.join(self._root, "_checkpoint")
-        self._state = _BucketedState(
-            spark, self._root, key=key, merge=_DistinctMerge(),
-            n_buckets=n_buckets, retain=retain,
+        super().__init__(
+            spark, stream, key, _DistinctMerge(), name, n_buckets, retain, root
         )
-        if root is not None:
-            self._state.recover()
-        self._batch_lock = threading.Lock()
-        self._stopped = False
-        self._query = None
 
-    # -- lifecycle ---------------------------------------------------------
-    def start(self) -> "HistoryView":
-        writer = self._stream.writeStream.outputMode("append").foreachBatch(
-            self._on_batch
-        )
-        self._query = (
-            writer.option("checkpointLocation", self._ckpt)
-            .queryName(self.name)
-            .start()
-        )
-        return self
-
-    def await_catch_up(self) -> "HistoryView":
-        self._query.processAllAvailable()
-        return self
-
-    def stop(self, cleanup: bool = True) -> None:
-        if self._query is not None:
-            self._query.stop()
-        # join the in-flight foreachBatch AND latch _stopped BEFORE cleanup
-        # removes the state root from under a mid-commit batch (see
-        # SumView.stop) — a late callback sees the latch, never the rmtree
-        with self._batch_lock:
-            self._stopped = True
-        if cleanup:
-            shutil.rmtree(self._root, ignore_errors=True)
-
-    # -- state maintenance -------------------------------------------------
-    def _on_batch(self, batch: DataFrame, epoch: int) -> None:
-        with self._batch_lock:
-            if self._stopped:
-                return
-            self._state.commit_delta(
-                batch.withColumn("_bucket", self._state.bucket_col()),
-                epoch=epoch,
-            )
-
-    # -- query surface -----------------------------------------------------
     def log(self) -> DataFrame | None:
         """The raw deduped change log (one row per change record)."""
         df = self._state.read()
@@ -1286,14 +1138,10 @@ class HistoryView:
             nxt.isNull().cast("int").alias("is_current"),
         )
 
-    def version(self) -> int:
-        return self._state.version
-
-
     def as_of(self, at) -> DataFrame | None:
         """Point-in-time dimension read: each key's value whose validity
         interval covers ``at`` (event-time travel — distinct from
-        ``_BucketedState.snapshot_at``, which travels COMMIT versions).
+        ``snapshot_at``, which travels COMMIT versions).
         Keys whose first change is after ``at`` are absent, exactly like
         a dimension table rebuilt from the log at that moment."""
         hist = self.history()

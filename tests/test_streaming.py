@@ -735,44 +735,119 @@ def test_stage_files_orders_frames_by_mtime(spark):
         cdc.cleanup(src)
 
 
-def test_view_restart_resumes_and_converges(spark, sf_dir, tmp_path):
-    """Full restart honesty, end-to-end: a CDC sum view is KILLED midway
+@pytest.mark.parametrize(
+    "crash",
+    [
+        "kill", "before_commit", "before_manifest", "after_manifest",
+        "after_commit", "mid_dispatch",
+    ],
+)
+def test_view_restart_resumes_and_converges(
+    spark, sf_dir, tmp_path, monkeypatch, crash
+):
+    """Full restart honesty, end-to-end: a CDC sum view dies midway
     through its replay, then a fresh instance over the SAME root recovers
     the LSM manifest (state + epoch high-water mark), Spark's checkpoint
     resumes the source offsets, any re-delivered batch is deduped by the
     epoch guard, and the converged snapshot equals the batch answer. This
     is the crash-recovery contract the reference gets for free from its
-    database sink (mysql_backend.go:63-144) — demonstrated here live."""
+    database sink (mysql_backend.go:63-144) — demonstrated here live.
+
+    ``kill`` stops the view from outside; every other case fails the
+    micro-batch of epoch 1 with one RuntimeError at a point of the commit
+    path: before ``commit_delta``; inside it, after the version dir is
+    written but before the manifest is published; inside it, right after
+    the publish; after ``commit_delta`` returned, before dispatch;
+    mid-dispatch, from the durable subscriber. On every path the durable
+    subscriber must see each epoch at least once."""
     import time as _time
 
+    from pyspark.errors import StreamingQueryException
+
     from proteus_spark.registry import load as _load
+    from proteus_spark.streaming.views import _BucketedState, _View
 
     root = str(tmp_path / "viewroot")
     ev = _load(spark, sf_dir, "events").select("user_id", "value")
     src = cdc.stage_stream(spark, ev, chunks=4, order_col="user_id")
+    armed = {"on": crash != "kill"}
+    seen: list[int] = []
+
+    def fire(epoch):
+        if armed["on"] and epoch >= 1:
+            armed["on"] = False
+            raise RuntimeError(f"injected crash: {crash}")
+
+    def exporter(delta, epoch):
+        if crash == "mid_dispatch":
+            fire(epoch)
+        seen.append(epoch)
+
+    orig_commit = _BucketedState.commit_delta
+    orig_persist = _BucketedState._persist_manifest
+    orig_dispatch = _View._dispatch_subscribers
+
+    def commit(self, delta, epoch=None):
+        fire(epoch)
+        return orig_commit(self, delta, epoch=epoch)
+
+    def persist(self, v, m, epoch=None):
+        if crash == "before_manifest":
+            fire(epoch)
+        orig_persist(self, v, m, epoch=epoch)
+        if crash == "after_manifest":
+            fire(epoch)
+
+    def dispatch(self, delta, epoch):
+        fire(epoch)
+        orig_dispatch(self, delta, epoch)
+
+    patch = {
+        "before_commit": (_BucketedState, "commit_delta", commit),
+        "before_manifest": (_BucketedState, "_persist_manifest", persist),
+        "after_manifest": (_BucketedState, "_persist_manifest", persist),
+        "after_commit": (_View, "_dispatch_subscribers", dispatch),
+    }.get(crash)
+    if patch is not None:
+        monkeypatch.setattr(*patch)
 
     def mk_view():
         deltas = cdc.as_update_deltas(
             src.subscribe(max_files_per_trigger=1),
             key_cols=["user_id"], value_col="value",
         )
-        return SumView(
+        view = SumView(
             spark, deltas, group_by="user_id", agg_attr="new_value",
             name="t_restart", mode="cdc", root=root,
         )
+        view.subscribe(exporter, durable=True)
+        return view
 
     v1 = mk_view().start()
     try:
-        # let at least one batch commit, then kill mid-replay
-        deadline = _time.time() + 60
-        while v1._state.version < 1 and _time.time() < deadline:
-            _time.sleep(0.2)
-        assert v1._state.version >= 1
+        if crash == "kill":
+            # let at least one batch commit, then kill mid-replay
+            deadline = _time.time() + 60
+            while v1._state.version < 1 and _time.time() < deadline:
+                _time.sleep(0.2)
+            assert v1._state.version >= 1
+        else:
+            # the injected error fails the batch and terminates the query
+            with pytest.raises(StreamingQueryException):
+                v1._query.awaitTermination(120)
+            assert not armed["on"]
     finally:
         v1.stop(cleanup=False)
+    monkeypatch.undo()
 
     v2 = mk_view()
-    assert v2._state.version >= 1  # recovered, not reset
+    # recovered, not reset: every commit that finished before the crash
+    if crash == "kill":
+        assert v2._state.version >= 1
+    else:
+        assert v2._state.version == (
+            0 if crash in ("before_commit", "before_manifest") else 1
+        )
     v2.start()
     try:
         v2.await_catch_up()
@@ -787,6 +862,9 @@ def test_view_restart_resumes_and_converges(spark, sf_dir, tmp_path):
             .collect()
         }
         assert got == exp
+        last = v2._state.last_epoch
+        assert last >= 1
+        assert set(range(last + 1)) <= set(seen), (last, seen)
     finally:
         v2.stop()
         cdc.cleanup(src)
@@ -1982,6 +2060,77 @@ def test_stop_latch_drops_late_foreachbatch(spark, sf_dir):
         ev.withColumn("ts", F.lit(1)).withColumn("rid", F.lit(1)), 0
     )
     assert not os.path.exists(root)
+
+
+@pytest.mark.parametrize("kind", ["sum_append", "sum_cdc", "join", "history"])
+def test_view_teardown_leaks_nothing(spark, sf_dir, kind):
+    """Every view kind tears down through the one core: after start ->
+    catch-up -> reads -> stop(), no persisted RDD survives (snapshot
+    memo, derived-view snapshot, dispatch checkpoint), no stream with the
+    view's name is active and the root is gone. freeze() then stop() is
+    idempotent: a second round changes nothing."""
+    import os
+
+    from proteus_spark.streaming.views import HistoryView, JoinView
+
+    def persisted_ids() -> set[int]:
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(k) for k in jmap.keySet().toArray()}
+
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+        "event_id", "user_id", "value"
+    )
+    src = cdc.stage_stream(spark, ev, chunks=2)
+    name = f"t_teardown_{kind}"
+    before = persisted_ids()
+    stream = src.subscribe(max_files_per_trigger=1)
+    if kind == "sum_append":
+        view = SumView(
+            spark, stream, group_by="user_id", agg_attr="value", name=name
+        )
+    elif kind == "sum_cdc":
+        view = SumView(
+            spark,
+            cdc.as_update_deltas(stream, key_cols=["user_id"], value_col="value"),
+            group_by="user_id", name=name, mode="cdc",
+            derived={"top": lambda s: s.orderBy(F.desc("new_value_sum")).limit(3)},
+        )
+        view.subscribe(lambda delta, epoch: delta.count())
+    elif kind == "join":
+        view = JoinView(
+            spark,
+            stream.select("user_id", "value"),
+            src.subscribe(max_files_per_trigger=1).select(
+                "user_id", F.col("event_id").alias("last_event")
+            ),
+            key="user_id", name=name,
+        )
+    else:
+        view = HistoryView(
+            spark, stream, key="user_id", order_col="event_id",
+            id_col="event_id", name=name,
+        )
+    root = view._root
+    try:
+        view.start().await_catch_up()
+        v = view.version()
+        assert v >= 1
+        if kind == "history":
+            assert view.history().count() == ev.count()
+        else:
+            assert view.snapshot().count() > 0
+            assert view.snapshot_at(v - 1).count() > 0
+        if kind == "sum_cdc":
+            assert view.snapshot_derived("top").count() == 3
+        for _ in range(2):
+            assert view.freeze() == v
+            view.stop()
+            assert persisted_ids() - before == set()
+            assert name not in {q.name for q in spark.streams.active}
+            assert not os.path.exists(root)
+    finally:
+        view.stop()
+        cdc.cleanup(src)
 
 
 def test_semdedup_on_ingest_converges_to_batch(spark, sf_dir):
