@@ -14,7 +14,7 @@ import os
 from pyspark.sql import functions as F
 
 from proteus_spark.operators import keyed_merge_join, topk
-from proteus_spark.registry import events_with_ts, load, register, spill, table_rows
+from proteus_spark.registry import events_with_ts, load, register, spill
 from proteus_spark.sources import cdc
 from proteus_spark.streaming.stateful import sessionize_stream
 from proteus_spark.streaming.views import SumView
@@ -22,33 +22,6 @@ from proteus_spark.streaming.views import SumView
 
 # snapshot materialization without a driver round-trip — see registry.spill
 _spill = spill
-
-# LSM bucket sizing (optimization r16, guide §2.2/§6): a view's bucket
-# count should track its expected state volume — each bucket is a
-# directory chain whose base file should sit in the 100 MB-1 GB band at
-# deployment scale — not a constant. Every micro-batch commit writes one
-# parquet file per TOUCHED bucket, so an oversized constant turns a
-# tiny-delta commit into n_buckets file creations: measured at sf0.01
-# (local FS, ~30 ms+/file), the 32-bucket default cost ~0.7-1.0 s of
-# every 1.3 s micro-batch; 4 buckets cut whole-query wall time 27-45%
-# (stream_sum_view 11.97->8.74 s, stream_join_view 5.14->3.49,
-# stream_scd2_history 4.63->2.57, best-of-3 same-session A/B). The rule
-# sizes buckets from the input table's FOOTER row count (metadata-only,
-# registry.table_rows — the r15 _PR_EDGE_ROWS_PER_PART pattern): ~4
-# buckets per million input rows (keys <= rows; ~100-200 B/row keeps a
-# bucket's base under ~1 GB even if every row is a distinct key), floor 4
-# (compaction granularity), cap 256 (manifest size; a 100 TB deployment
-# raises the cap with its cluster — the knob is the constructor arg, and
-# the view DEFAULT stays 32 for callers without a sized input).
-_VIEW_BUCKET_ROWS = 250_000
-
-
-def _view_buckets(sf_dir: str, *tables: str) -> int:
-    rows = sum(table_rows(sf_dir, t) for t in tables)
-    if rows <= 0:
-        return 32  # unreadable footer: keep the constructor default
-    return max(4, min(256, -(-rows // _VIEW_BUCKET_ROWS)))
-
 
 # Per-trigger sink appends (guide §6, output sizing): a micro-batch's
 # emission is a tiny delta, but the emitted frame usually carries the full
@@ -85,7 +58,6 @@ def stream_sum_view(spark, sf_dir):
     view = SumView(
         spark, src.subscribe(), group_by="user_id", agg_attr="value",
         name="stream_sum_view", mode="append",
-        n_buckets=_view_buckets(sf_dir, "events"),
     ).start()
     try:
         view.await_catch_up()
@@ -135,7 +107,6 @@ def stream_sum_view_timetravel(spark, sf_dir):
     view = SumView(
         spark, src.subscribe(), group_by="user_id", agg_attr="value",
         name="stream_sum_view_timetravel", mode="append",
-        n_buckets=_view_buckets(sf_dir, "events"),
     ).start()
     try:
         view.await_catch_up()
@@ -180,7 +151,6 @@ def stream_sum_view_cdc(spark, sf_dir):
     view = SumView(
         spark, deltas, group_by="user_id", agg_attr="new_value",
         name="stream_sum_view_cdc", mode="cdc",
-        n_buckets=_view_buckets(sf_dir, "events"),
     ).start()
     try:
         view.await_catch_up()
@@ -225,7 +195,6 @@ def stream_sum_view_deletes(spark, sf_dir):
     view = SumView(
         spark, deltas, group_by="user_id", agg_attr="new_value",
         name="stream_sum_view_deletes", mode="cdc",
-        n_buckets=_view_buckets(sf_dir, "events"),
     ).start()
     try:
         view.await_catch_up()
@@ -337,7 +306,6 @@ def stream_sum_view_broker(spark, sf_dir):
         view = SumView(
             spark, deltas, group_by="user_id", agg_attr="new_value",
             name="stream_sum_view_broker", mode="cdc",
-            n_buckets=_view_buckets(sf_dir, "events"),
         ).start()
         try:
             view.await_catch_up()
@@ -394,7 +362,6 @@ def stream_sum_view_minilog(spark, sf_dir):
     view = SumView(
         spark, deltas, group_by="user_id", agg_attr="new_value",
         name="stream_sum_view_minilog", mode="cdc",
-        n_buckets=_view_buckets(sf_dir, "events"),
     ).start()
     try:
         view.await_catch_up()
@@ -439,7 +406,6 @@ def stream_cdf_export_roundtrip(spark, sf_dir):
     view = SumView(
         spark, src.subscribe(), group_by="user_id", agg_attr="value",
         name="stream_cdf_export", mode="append",
-        n_buckets=_view_buckets(sf_dir, "events"),
     )
     # durable: exporter IO errors fail the batch so a restart replays
     # the epoch and completes the export (ADVICE r13)
@@ -514,7 +480,6 @@ def stream_compacted_bootstrap(spark, sf_dir):
     view = SumView(
         spark, src.subscribe(), group_by="user_id", agg_attr="value",
         name="stream_compacted_bootstrap_src", mode="append",
-        n_buckets=_view_buckets(sf_dir, "events"),
     )
     view.subscribe(
         minilog.cdf_exporter(hist, partitions=4, key_col="user_id"),
@@ -642,7 +607,6 @@ def stream_lobsters_pipeline(spark, sf_dir):
         name="stream_lobsters",
         mode="append",
         derived={"join_topk": join_topk},
-        n_buckets=_view_buckets(sf_dir, "lineitem"),
     ).start()
     try:
         view.await_catch_up()
@@ -911,7 +875,6 @@ def stream_static_enrich(spark, sf_dir):
     view = SumView(
         spark, enriched, group_by="segment", agg_attr="value",
         name="stream_static_enrich", mode="append",
-        n_buckets=_view_buckets(sf_dir, "events"),
     ).start()
     try:
         view.await_catch_up()
@@ -1083,7 +1046,6 @@ def stream_join_view(spark, sf_dir):
         key="o_orderkey",
         name="stream_join_view",
         defaults={"o_totalprice": 0.0, "revenue": 0.0},
-        n_buckets=_view_buckets(sf_dir, "orders"),
     ).start()
     try:
         view.await_catch_up()
@@ -1242,7 +1204,6 @@ def stream_scd2_history(spark, sf_dir):
     view = HistoryView(
         spark, src.subscribe(), key="user_id", order_col="ts_ns",
         id_col="event_id", name="stream_scd2_history",
-        n_buckets=_view_buckets(sf_dir, "events"),
     ).start()
     try:
         view.await_catch_up()
@@ -1302,7 +1263,6 @@ def stream_scd2_asof(spark, sf_dir):
     view = HistoryView(
         spark, src.subscribe(), key="user_id", order_col="ts_ns",
         id_col="event_id", name="stream_scd2_asof",
-        n_buckets=_view_buckets(sf_dir, "events"),
     ).start()
     try:
         view.await_catch_up()
@@ -1382,7 +1342,6 @@ def stream_join_view_deletes(spark, sf_dir):
         key="o_orderkey",
         name="stream_join_view_deletes",
         defaults={"o_totalprice": 0.0, "revenue": 0.0},
-        n_buckets=_view_buckets(sf_dir, "orders"),
     ).start()
     try:
         view.await_catch_up()
@@ -2045,7 +2004,6 @@ def stream_view_dag_via_log(spark, sf_dir):
     up = SumView(
         spark, src_votes.subscribe(), group_by="l_orderkey",
         agg_attr="vote", name="dag_sum_upstream", mode="append",
-        n_buckets=_view_buckets(sf_dir, "lineitem"),
     )
     up.subscribe(
         minilog.cdf_exporter(topic, partitions=n_parts, key_col="l_orderkey"),
@@ -2086,7 +2044,6 @@ def stream_view_dag_via_log(spark, sf_dir):
     down = JoinView(
         spark, left, right, key="o_orderkey", name="dag_join_downstream",
         defaults={"vote_sum": 0.0}, order_col="_seq",
-        n_buckets=_view_buckets(sf_dir, "orders"),
     )
     up.start()
     down.start()

@@ -10,6 +10,7 @@ sweep in so it runs before every verification-window freeze:
     python scripts/gate_full_registry.py              # sf0.01, all queries
     python scripts/gate_full_registry.py --sf sf0.001 # other SF
     python scripts/gate_full_registry.py --window     # first-50 only
+    python scripts/gate_full_registry.py --only 'stream_*'  # name patterns
 
 Driver-faithful details:
 - a PLAIN local[32] session (no session.py builder configs — the driver
@@ -33,6 +34,7 @@ import os
 import sys
 import tempfile
 import time
+from fnmatch import fnmatch
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -44,7 +46,10 @@ def main() -> int:
     ap.add_argument(
         "--window", action="store_true", help="check only the first-50 PRIORITY window"
     )
-    ap.add_argument("--only", nargs="*", default=None, help="restrict to these queries")
+    ap.add_argument(
+        "--only", nargs="*", default=None,
+        help="restrict to queries matching these shell-style patterns",
+    )
     ap.add_argument("--cores", type=int, default=32)
     args = ap.parse_args()
     sf_dir = os.path.join("/root/testdata", args.sf)
@@ -71,7 +76,7 @@ def main() -> int:
     if args.window:
         names = names[:50]
     if args.only:
-        names = [n for n in names if n in set(args.only)]
+        names = [n for n in names if any(fnmatch(n, p) for p in args.only)]
 
     results: dict[str, dict] = {}
     bad: list[str] = []

@@ -735,41 +735,31 @@ def test_stage_files_orders_frames_by_mtime(spark):
         cdc.cleanup(src)
 
 
-@pytest.mark.parametrize(
-    "crash",
-    [
-        "kill", "before_commit", "before_manifest", "after_manifest",
-        "after_commit", "mid_dispatch",
-    ],
-)
-def test_view_restart_resumes_and_converges(
-    spark, sf_dir, tmp_path, monkeypatch, crash
-):
-    """Full restart honesty, end-to-end: a CDC sum view dies midway
-    through its replay, then a fresh instance over the SAME root recovers
-    the LSM manifest (state + epoch high-water mark), Spark's checkpoint
-    resumes the source offsets, any re-delivered batch is deduped by the
-    epoch guard, and the converged snapshot equals the batch answer. This
-    is the crash-recovery contract the reference gets for free from its
-    database sink (mysql_backend.go:63-144) — demonstrated here live.
+_CRASH_POINTS = [
+    "kill", "before_commit", "before_manifest", "after_manifest",
+    "after_commit", "mid_dispatch",
+]
 
-    ``kill`` stops the view from outside; every other case fails the
-    micro-batch of epoch 1 with one RuntimeError at a point of the commit
-    path: before ``commit_delta``; inside it, after the version dir is
-    written but before the manifest is published; inside it, right after
-    the publish; after ``commit_delta`` returned, before dispatch;
-    mid-dispatch, from the durable subscriber. On every path the durable
-    subscriber must see each epoch at least once."""
+
+def _crash_and_recover(monkeypatch, crash, mk_view):
+    """Run a view from ``mk_view()`` (pinned ``root=``, not started) with
+    a durable exporter until ``crash``, then rebuild it over the same
+    root. ``kill`` stops the view from outside once a batch has
+    committed; every other point fails the micro-batch of epoch 1 with one
+    RuntimeError on the commit path: before ``commit_delta``; inside it,
+    after the version dir is written but before the manifest is
+    published; inside it, right after the publish; after ``commit_delta``
+    returned, before dispatch; mid-dispatch, from the durable exporter.
+
+    Asserts the second instance recovered exactly the commits that
+    finished, with the first instance's bucket count. Returns it, not
+    started, and the list of epochs the exporter has seen."""
     import time as _time
 
     from pyspark.errors import StreamingQueryException
 
-    from proteus_spark.registry import load as _load
     from proteus_spark.streaming.views import _BucketedState, _View
 
-    root = str(tmp_path / "viewroot")
-    ev = _load(spark, sf_dir, "events").select("user_id", "value")
-    src = cdc.stage_stream(spark, ev, chunks=4, order_col="user_id")
     armed = {"on": crash != "kill"}
     seen: list[int] = []
 
@@ -811,19 +801,9 @@ def test_view_restart_resumes_and_converges(
     if patch is not None:
         monkeypatch.setattr(*patch)
 
-    def mk_view():
-        deltas = cdc.as_update_deltas(
-            src.subscribe(max_files_per_trigger=1),
-            key_cols=["user_id"], value_col="value",
-        )
-        view = SumView(
-            spark, deltas, group_by="user_id", agg_attr="new_value",
-            name="t_restart", mode="cdc", root=root,
-        )
-        view.subscribe(exporter, durable=True)
-        return view
-
-    v1 = mk_view().start()
+    v1 = mk_view()
+    v1.subscribe(exporter, durable=True)
+    v1.start()
     try:
         if crash == "kill":
             # let at least one batch commit, then kill mid-replay
@@ -841,6 +821,7 @@ def test_view_restart_resumes_and_converges(
     monkeypatch.undo()
 
     v2 = mk_view()
+    v2.subscribe(exporter, durable=True)
     # recovered, not reset: every commit that finished before the crash
     if crash == "kill":
         assert v2._state.version >= 1
@@ -848,9 +829,49 @@ def test_view_restart_resumes_and_converges(
         assert v2._state.version == (
             0 if crash in ("before_commit", "before_manifest") else 1
         )
-    v2.start()
+    assert v1._state.n_buckets is not None
+    assert v2._state.n_buckets == v1._state.n_buckets
+    return v2, seen
+
+
+def _assert_every_epoch_seen(view, seen):
+    last = view._state.last_epoch
+    assert last >= 1
+    assert set(range(last + 1)) <= set(seen), (last, seen)
+
+
+@pytest.mark.parametrize("crash", _CRASH_POINTS)
+def test_view_restart_resumes_and_converges(
+    spark, sf_dir, tmp_path, monkeypatch, crash
+):
+    """Full restart honesty, end-to-end: a CDC sum view dies midway
+    through its replay (at ``crash``, see ``_crash_and_recover``), then a
+    fresh instance over the SAME root recovers the LSM manifest (state,
+    epoch high-water mark, bucket count), Spark's checkpoint resumes the
+    source offsets, any re-delivered batch is deduped by the epoch guard,
+    and the converged snapshot equals the batch answer. This is the
+    crash-recovery contract the reference gets for free from its database
+    sink (mysql_backend.go:63-144) — demonstrated here live. On every
+    path the durable subscriber must see each epoch at least once."""
+    from proteus_spark.registry import load as _load
+
+    root = str(tmp_path / "viewroot")
+    ev = _load(spark, sf_dir, "events").select("user_id", "value")
+    src = cdc.stage_stream(spark, ev, chunks=4, order_col="user_id")
+
+    def mk_view():
+        deltas = cdc.as_update_deltas(
+            src.subscribe(max_files_per_trigger=1),
+            key_cols=["user_id"], value_col="value",
+        )
+        return SumView(
+            spark, deltas, group_by="user_id", agg_attr="new_value",
+            name="t_restart", mode="cdc", root=root,
+        )
+
+    v2, seen = _crash_and_recover(monkeypatch, crash, mk_view)
     try:
-        v2.await_catch_up()
+        v2.start().await_catch_up()
         got = {
             r["user_id"]: round(r["new_value_sum"], 4)
             for r in v2.snapshot().collect()
@@ -862,21 +883,19 @@ def test_view_restart_resumes_and_converges(
             .collect()
         }
         assert got == exp
-        last = v2._state.last_epoch
-        assert last >= 1
-        assert set(range(last + 1)) <= set(seen), (last, seen)
+        _assert_every_epoch_seen(v2, seen)
     finally:
         v2.stop()
         cdc.cleanup(src)
 
 
-def test_join_view_restart_resumes_and_converges(spark, sf_dir, tmp_path):
-    """JoinView restart-in-place: kill the two-stream keyed-merge view
-    after at least one commit, rebuild over the same root, and the
-    converged snapshot equals the batch merge — the coalesce merge's
-    per-column last-writer state survives the restart."""
-    import time as _time
-
+@pytest.mark.parametrize("crash", _CRASH_POINTS)
+def test_join_view_restart_resumes_and_converges(
+    spark, sf_dir, tmp_path, monkeypatch, crash
+):
+    """JoinView restart-in-place at every commit-path crash point: the
+    rebuilt view over the same root converges to the batch merge — the
+    coalesce merge's per-column last-writer state survives the restart."""
     from proteus_spark.registry import load as _load
     from proteus_spark.streaming.views import JoinView
 
@@ -901,20 +920,9 @@ def test_join_view_restart_resumes_and_converges(spark, sf_dir, tmp_path):
             root=root,
         )
 
-    v1 = mk_view().start()
+    v2, seen = _crash_and_recover(monkeypatch, crash, mk_view)
     try:
-        deadline = _time.time() + 60
-        while v1._state.version < 1 and _time.time() < deadline:
-            _time.sleep(0.2)
-        assert v1._state.version >= 1
-    finally:
-        v1.stop(cleanup=False)
-
-    v2 = mk_view()
-    assert v2._state.version >= 1
-    v2.start()
-    try:
-        v2.await_catch_up()
+        v2.start().await_catch_up()
         got = {
             r["o_orderkey"]: (r["o_totalprice"], round(r["revenue"], 4))
             for r in v2.snapshot().collect()
@@ -930,10 +938,52 @@ def test_join_view_restart_resumes_and_converges(spark, sf_dir, tmp_path):
         )
         exp = {r["o_orderkey"]: (r["p"], r["r"]) for r in exp_rows}
         assert got == exp
+        _assert_every_epoch_seen(v2, seen)
     finally:
         v2.stop()
         cdc.cleanup(src_l)
         cdc.cleanup(src_r)
+
+
+@pytest.mark.parametrize("crash", _CRASH_POINTS)
+def test_history_view_restart_resumes_and_converges(
+    spark, sf_dir, tmp_path, monkeypatch, crash
+):
+    """HistoryView restart-in-place at every commit-path crash point: the
+    rebuilt view's change log equals the distinct input (no change record
+    lost, replays deduped) and its SCD2 rows close every interval but
+    one per key."""
+    from proteus_spark.registry import events_with_ts
+    from proteus_spark.streaming.views import HistoryView
+
+    root = str(tmp_path / "hvroot")
+    ev = events_with_ts(spark, sf_dir).select(
+        "user_id", "event_id", "ts_ns", "value"
+    )
+    src = cdc.stage_stream(spark, ev, chunks=4)
+
+    def mk_view():
+        return HistoryView(
+            spark, src.subscribe(max_files_per_trigger=1), key="user_id",
+            order_col="ts_ns", id_col="event_id", name="t_hv_restart",
+            root=root,
+        )
+
+    v2, seen = _crash_and_recover(monkeypatch, crash, mk_view)
+    try:
+        v2.start().await_catch_up()
+        cols = ["user_id", "event_id", "ts_ns", "value"]
+        got = {tuple(r) for r in v2.log().select(*cols).collect()}
+        assert got == {tuple(r) for r in ev.select(*cols).collect()}
+        hist = v2.history().collect()
+        assert len(hist) == len(got)
+        assert sum(r["is_current"] for r in hist) == (
+            ev.select("user_id").distinct().count()
+        )
+        _assert_every_epoch_seen(v2, seen)
+    finally:
+        v2.stop()
+        cdc.cleanup(src)
 
 
 def test_lsm_epoch_replay_is_idempotent(spark):
@@ -2073,16 +2123,12 @@ def test_view_teardown_leaks_nothing(spark, sf_dir, kind):
 
     from proteus_spark.streaming.views import HistoryView, JoinView
 
-    def persisted_ids() -> set[int]:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        return {int(k) for k in jmap.keySet().toArray()}
-
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         "event_id", "user_id", "value"
     )
     src = cdc.stage_stream(spark, ev, chunks=2)
     name = f"t_teardown_{kind}"
-    before = persisted_ids()
+    before = _persisted_ids(spark)
     stream = src.subscribe(max_files_per_trigger=1)
     if kind == "sum_append":
         view = SumView(
@@ -2125,7 +2171,7 @@ def test_view_teardown_leaks_nothing(spark, sf_dir, kind):
         for _ in range(2):
             assert view.freeze() == v
             view.stop()
-            assert persisted_ids() - before == set()
+            assert _persisted_ids(spark) - before == set()
             assert name not in {q.name for q in spark.streams.active}
             assert not os.path.exists(root)
     finally:
@@ -2463,25 +2509,143 @@ def test_stage_stream_records_schema_and_subscribe_reuses_it(spark, monkeypatch)
         cdc.cleanup(src)
 
 
-def test_view_buckets_tracks_input_rows(monkeypatch):
-    """Optimization r16 (guide §2.2/§6): LSM bucket count derives from the
-    input table's footer row count — floor 4, ~1 bucket per 250k rows,
-    cap 256 — and falls back to the constructor default (32) when no
-    footer is readable. A constant bucket count is either a small-files
-    problem (tiny state) or an unsplittable-bucket problem (huge state)."""
-    import proteus_spark.queries.streaming as QS
+def test_view_buckets_tracks_input_rows():
+    """A view's LSM bucket count derives from the rows of its first
+    commit that carries any — floor 4, ~1 bucket per 250k rows, cap 256.
+    A constant bucket count is either a small-files problem (tiny state)
+    or an unsplittable-bucket problem (huge state)."""
+    from proteus_spark.streaming.views import _buckets_for
 
-    rows = {"t": 0}
-    monkeypatch.setattr(QS, "table_rows", lambda sf, name: rows[name])
-    assert QS._view_buckets("x", "t") == 32  # unknown -> default
-    rows["t"] = 10_000
-    assert QS._view_buckets("x", "t") == 4  # floor
-    rows["t"] = 1_000_000
-    assert QS._view_buckets("x", "t") == 4
-    rows["t"] = 10_000_000
-    assert QS._view_buckets("x", "t") == 40  # ~1 per 250k
-    rows["t"] = 10_000_000_000
-    assert QS._view_buckets("x", "t") == 256  # cap
+    assert _buckets_for(10_000) == 4  # floor
+    assert _buckets_for(1_000_000) == 4
+    assert _buckets_for(10_000_000) == 40  # ~1 per 250k
+    assert _buckets_for(10_000_000_000) == 256  # cap
+
+
+def _cdc_rows(spark, n_keys: int):
+    return spark.range(n_keys).select(
+        F.col("id").alias("k"),
+        F.lit(None).cast("double").alias("old_value"),
+        F.lit(1.0).alias("new_value"),
+    )
+
+
+def _persisted_ids(spark) -> set[int]:
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    return {int(k) for k in jmap.keySet().toArray()}
+
+
+def test_view_bucket_count_pinned_or_set_by_first_rows(spark):
+    """An explicit ``n_buckets`` pins the count; otherwise an empty first
+    batch leaves it unset and the first batch with rows sets it — and
+    every manifest records it."""
+    import json
+    import os
+
+    pinned = SumView(
+        spark, stream=None, group_by="k", agg_attr="new_value",
+        name="t_pinned", mode="cdc", n_buckets=7,
+    )
+    auto = SumView(
+        spark, stream=None, group_by="k", agg_attr="new_value",
+        name="t_auto", mode="cdc",
+    )
+    try:
+        pinned._on_cdc_batch(_cdc_rows(spark, 10_000), 0)
+        assert pinned._state.n_buckets == 7
+        auto._on_cdc_batch(_cdc_rows(spark, 0), 0)
+        assert auto._state.n_buckets is None
+        assert auto.version() == 0
+        auto._on_cdc_batch(_cdc_rows(spark, 10), 1)
+        assert auto._state.n_buckets == 4
+        auto._on_cdc_batch(_cdc_rows(spark, 10), 2)
+        assert {r["k"]: r["new_value_sum"] for r in auto.snapshot().collect()} == {
+            k: 2.0 for k in range(10)
+        }
+        recorded = []
+        for v in range(3):
+            with open(os.path.join(auto._root, f"manifest_v{v}.json")) as f:
+                recorded.append(json.load(f)["n_buckets"])
+        assert recorded == [None, 4, 4]
+    finally:
+        pinned.stop()
+        auto.stop()
+
+
+def test_self_sized_view_writes_few_buckets_and_leaks_nothing(spark):
+    """A default-constructed view whose first batch has 10k keys sizes
+    itself to 4 buckets — each version writes at most 4 ``_bucket=`` dirs,
+    not 32 — and the checkpoint its sizing count read is released."""
+    import os
+
+    before = _persisted_ids(spark)
+    view = SumView(
+        spark, stream=None, group_by="k", agg_attr="new_value",
+        name="t_self_sized", mode="cdc",
+    )
+    try:
+        view._on_cdc_batch(_cdc_rows(spark, 10_000), 0)
+        view._on_cdc_batch(_cdc_rows(spark, 10_000), 1)
+        assert view._state.n_buckets == 4
+        for v in range(2):
+            dirs = [
+                d for d in os.listdir(view._state._vdir(v))
+                if d.startswith("_bucket=")
+            ]
+            assert 0 < len(dirs) <= 4, (v, dirs)
+        leaked = _persisted_ids(spark) - before
+        assert not leaked, f"sizing checkpoint leaked RDD(s) {sorted(leaked)}"
+    finally:
+        view.stop()
+
+
+def test_join_view_restart_keeps_persisted_bucket_count(spark, tmp_path):
+    """A restarted view hashes keys with the bucket count that wrote its
+    state, not its constructor's. Were it to re-hash, a DELETE after the
+    restart would land in a different bucket from the key's older row, and
+    compacting the tombstone's bucket alone would resurrect the key."""
+    from proteus_spark.streaming.views import JoinView
+
+    root = str(tmp_path / "jvroot")
+    schema = "k bigint, price double, _op string"
+    ids = spark.range(200).select(
+        "id",
+        F.pmod(F.xxhash64("id"), F.lit(2)).alias("b2"),
+        F.pmod(F.xxhash64("id"), F.lit(3)).alias("b3"),
+    ).collect()
+    # a key whose bucket differs between 2 and 3 buckets, and fillers that
+    # share its 3-bucket slot
+    key = next(r for r in ids if r["b2"] != r["b3"])
+    fill = [r["id"] for r in ids if r["b3"] == key["b3"] and r["id"] != key["id"]]
+    key = key["id"]
+
+    def mk_view(n):
+        return JoinView(
+            spark,
+            left=spark.createDataFrame([], "k bigint, price double"),
+            right=spark.createDataFrame([], "k bigint, price double"),
+            key="k", name="t_jv_buckets", defaults={"price": 0.0},
+            n_buckets=n, root=root,
+        )
+
+    v1 = mk_view(2)
+    v1._on_batch(spark.createDataFrame([(key, 1.0, None)], schema), 0)
+    v1.stop(cleanup=False)
+
+    v2 = mk_view(3)
+    try:
+        assert v2._state.n_buckets == 2  # the persisted count wins
+        v2._on_batch(spark.createDataFrame([(key, None, "DELETE")], schema), 1)
+        # force compaction: every chain of two or more versions folds
+        v2._state.max_chain = 2
+        for e, k in ((2, fill[0]), (3, fill[1])):
+            v2._on_batch(spark.createDataFrame([(k, 3.0, None)], schema), e)
+        chains = v2._state.manifests[-1]
+        assert all(1 not in c for c in chains.values()), chains  # folded
+        got = {r["k"] for r in v2.snapshot().collect()}
+        assert got == {fill[0], fill[1]}, got
+    finally:
+        v2.stop()
 
 
 def test_subscriber_dispatch_executes_delta_once_and_releases(spark):
@@ -2491,10 +2655,6 @@ def test_subscriber_dispatch_executes_delta_once_and_releases(spark):
     of each re-executing the micro-batch plan — and the checkpoint is
     released after the fan-out (no per-batch block accretion)."""
     from proteus_spark.streaming.views import _BucketedState
-
-    def persisted_ids() -> set[int]:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        return {int(k) for k in jmap.keySet().toArray()}
 
     jobs = {"n": 0}
     orig = _BucketedState.commit_delta
@@ -2513,7 +2673,7 @@ def test_subscriber_dispatch_executes_delta_once_and_releases(spark):
         name="t_dispatch_once", mode="cdc", n_buckets=2,
     )
     view.subscribe(lambda delta, epoch: seen.append(delta.count()))
-    before = persisted_ids()
+    before = _persisted_ids(spark)
     import unittest.mock as mock
 
     with mock.patch.object(_BucketedState, "commit_delta", counting_commit):
@@ -2526,7 +2686,7 @@ def test_subscriber_dispatch_executes_delta_once_and_releases(spark):
             view._on_cdc_batch(b, 1)
             assert seen == [2, 2]
             assert jobs["n"] == 2
-            leaked = persisted_ids() - before
+            leaked = _persisted_ids(spark) - before
             assert not leaked, (
                 f"dispatch checkpoint leaked persisted RDD(s) {sorted(leaked)}"
             )
