@@ -5,8 +5,8 @@ Go/Java clients (pkg/proteus-go-client/proteus_client.go:29-79); this
 engine is a Python library by design (SURVEY §7.1 maps the client to a
 module API), and this module closes the remaining distance with a thin
 stdlib HTTP wrapper over ``Engine`` — same request/response semantics,
-JSON instead of protobuf (``wire.py`` is the protobuf sibling: the
-reference's actual proto3 wire format in gRPC frames over TCP):
+JSON instead of protobuf (``h2.GrpcQueryServer`` is the protobuf
+sibling: the reference's actual proto3 wire format as gRPC over HTTP/2):
 
 - ``GET /config`` — schema advertisement (GetConfig,
   rpcserver.go:141-152): the queryable table list;

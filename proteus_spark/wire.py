@@ -1,33 +1,23 @@
-"""Protobuf wire-format parity — the reference's actual serialization.
+"""Protobuf wire format: the reference's actual serialization.
 
 The reference serves gRPC with proto3 messages (qpuapi.proto,
 qpuextapi.proto, qpu.proto; server internal/rpc_server/rpcserver.go:73-98).
-Every earlier round closed the BEHAVIORAL surface over JSON (server.py);
-this module closes the remaining SERIALIZATION delta (the round-8
-verdict's last "What's missing" item) with a hand-rolled proto3 wire
-codec — no protobuf/gRPC libraries exist in this environment, and the
-proto3 encoding is a small, public, stable spec (varints, tagged fields,
+This module is the hand-rolled proto3 codec for those messages — no
+protobuf/gRPC libraries exist in this environment, and the proto3
+encoding is a small, public, stable spec (varints, tagged fields,
 length-delimited submessages):
 
 - generic wire primitives (encode_varint/decode, tag/field iteration);
 - per-message codecs for the reference's API messages, field numbers and
-  types transcribed from the .proto files (cited per codec);
+  types transcribed from the .proto files (cited per codec), plus the
+  mapping of raw attribute values onto qpu.Value's typed oneof;
 - the gRPC length-prefixed MESSAGE FRAME (1-byte compressed flag +
   4-byte big-endian length + payload) — the exact layer gRPC puts each
-  protobuf message in;
-- ``ProtobufQueryServer``: QueryUnary / QuerySubscribe / Query /
-  GetConfig over TCP using those frames.
+  protobuf message in — with a reader that bounds the declared length.
 
-This server takes the method as one ASCII preamble line and returns one
-JSON status line (code 0 = OK, else a gRPC status code + message)
-before the frames — a deliberately minimal transport for tests and
-embedding. The REAL envelope — HTTP/2 with HPACK headers, ``:path``
-method routing, and grpc-status trailers — is ``h2.GrpcQueryServer``
-(proteus_spark/h2.py), which subclasses this server and reuses its
-method handlers verbatim, so with it the full gRPC stack matches the
-reference byte-for-byte (interop-proven against curl/nghttp).
-Golden-byte tests in tests/test_wire.py pin the proto3 encoding against
-hand-computed bytes, not just round-trips.
+``h2.GrpcQueryServer`` carries these frames on HTTP/2; ``server.py`` is
+the JSON transport. Golden-byte tests in tests/test_wire.py pin the
+proto3 encoding against hand-computed bytes, not just round-trips.
 
 Message values are plain Python dicts mirroring proto field names;
 proto3 presence rules apply (default-valued fields are omitted on the
@@ -736,330 +726,6 @@ def read_frame(rf, max_len: int = MAX_MESSAGE_BYTES) -> bytes | None:
     return payload
 
 
-# ---------------------------------------------------------------------------
-# TCP server speaking the wire format
-# ---------------------------------------------------------------------------
-
-
-class _TrackedConn:
-    """Socket shim for the preamble transport: ``started`` flips when
-    _ok() acks, so ``_handle`` knows a later failure can only be
-    signalled by closing the connection (socket objects are slotted —
-    the flag can't live on the socket itself)."""
-
-    __slots__ = ("_sock", "started")
-
-    def __init__(self, sock):
-        self._sock = sock
-        self.started = False
-
-    def sendall(self, data: bytes) -> None:
-        self._sock.sendall(data)
-
-
-def _updates_timeout(meta: dict) -> float:
-    """Per-request quiet-close window for view subscriptions, carried in
-    QueryRequest.metadata (parity with the NDJSON server's request-level
-    ``updates_timeout``). Clamped to [0, 300] via the SHARED
-    ``engine.clamp_updates_timeout`` helper (ADVICE r14: the old local
-    min/max clamp let ``float('nan')`` through — and
-    ``Queue.get(timeout=nan)`` blocks forever, pinning a server stream
-    thread; non-finite now falls back like any other malformed value).
-    Malformed values fall back to the 5s default."""
-    from proteus_spark.engine import clamp_updates_timeout
-
-    raw = meta.get("updates_timeout")
-    if raw is None:
-        return 5.0
-    return clamp_updates_timeout(raw)
-
-
-class ProtobufQueryServer:
-    """Serve an ``Engine`` with protobuf-encoded messages in gRPC frames
-    over TCP — the serialization-parity sibling of server.QueryServer.
-
-    Protocol per connection (the HTTP/2 envelope stand-in, documented in
-    the module docstring): client sends one ASCII method line
-    (``QueryUnary`` | ``Query`` | ``QuerySubscribe`` | ``GetConfig``),
-    then the request as one gRPC frame. Server responds with one JSON
-    status line (``{"status": 0}`` or ``{"status": <grpc code>,
-    "error": ...}``), then the response frames: exactly one QueryResp
-    frame for QueryUnary, one ConfigResponse frame for GetConfig, a
-    stream of ResponseStreamRecord frames ending with END_OF_STREAM for
-    Query/QuerySubscribe. Request messages match the .proto exactly:
-    ``Query`` takes a RequestStreamRecord (the bidi stream's element
-    type — its QueryRequest.metadata may name a live ``views`` entry,
-    continuing the stream as UPDATEDELTA records after END_OF_STREAM,
-    the reference's snapshot+subscribe composite), ``QuerySubscribe``
-    and ``QueryUnary`` take the simplified QueryReq. Analysis/parse
-    errors map to gRPC INVALID_ARGUMENT (3), internal failures to
-    INTERNAL (13) — the same mapping rpcserver.go gets from Go's status
-    package."""
-
-    def __init__(
-        self,
-        engine,
-        host: str = "127.0.0.1",
-        port: int = 0,
-        views: dict | None = None,
-    ):
-        import socket
-        import threading
-
-        self.engine = engine
-        self.views = views or {}
-        self._sock = socket.create_server((host, port))
-        self.host, self.port = self._sock.getsockname()[:2]
-        self._stop = threading.Event()
-        self._thread = threading.Thread(target=self._serve, daemon=True)
-
-    def start(self) -> "ProtobufQueryServer":
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        import socket
-
-        self._stop.set()
-        try:  # unblock accept()
-            socket.create_connection((self.host, self.port), timeout=1).close()
-        except OSError:
-            pass
-        self._sock.close()
-        self._thread.join(timeout=5)
-
-    def __enter__(self) -> "ProtobufQueryServer":
-        return self.start()
-
-    def __exit__(self, *exc) -> None:
-        self.stop()
-
-    # -- connection handling ------------------------------------------------
-    def _serve(self) -> None:
-        import threading
-
-        while not self._stop.is_set():
-            try:
-                conn, _addr = self._sock.accept()
-            except OSError:
-                return
-            if self._stop.is_set():
-                conn.close()
-                return
-            threading.Thread(
-                target=self._handle, args=(conn,), daemon=True
-            ).start()
-
-    def _handle(self, raw_conn) -> None:
-        import json
-
-        # _TrackedConn records whether _ok() has acked: once frames are
-        # on the wire, a failure can no longer be reported as a status
-        # line (it would interleave into the frame stream and parse as a
-        # corrupt frame header) — the only honest signal left is closing
-        # the connection, the preamble-transport analogue of what the h2
-        # subclass does with error trailers.
-        conn = _TrackedConn(raw_conn)
-        rf = raw_conn.makefile("rb")
-        try:
-            method = rf.readline().decode("ascii", "replace").strip()
-            body = read_frame(rf)
-            if body is None:
-                return
-            try:
-                if method == "QueryUnary":
-                    self._query_unary(conn, body)
-                elif method == "Query":
-                    # bidi element type: RequestStreamRecord; both query
-                    # arms are served (SQL directly; ASTQuery translated
-                    # onto the operator layer)
-                    req = decode_request_stream_record(body).get(
-                        "queryRequest"
-                    )
-                    q = (req or {}).get("query", {})
-                    meta = (req or {}).get("metadata", {})
-                    view = self.views.get(meta.get("view"))
-                    if "query_sql" in q:
-                        self._query_stream(
-                            conn,
-                            q["query_sql"]["queryStr"],
-                            view=view,
-                            updates_timeout=_updates_timeout(meta),
-                        )
-                    elif "query_ast" in q:
-                        self._query_ast_stream(conn, q["query_ast"])
-                    else:
-                        raise ValueError(
-                            "Query expects a RequestStreamRecord carrying "
-                            "QueryRequest.query (query_sql or query_ast)"
-                        )
-                elif method == "QuerySubscribe":
-                    self._query_stream(
-                        conn, decode_query_req(body)["queryStr"]
-                    )
-                elif method == "GetConfig":
-                    self._get_config(conn)
-                else:
-                    conn.sendall(
-                        (
-                            json.dumps(
-                                {
-                                    "status": 12,  # UNIMPLEMENTED
-                                    "error": f"unknown method {method!r}",
-                                }
-                            )
-                            + "\n"
-                        ).encode()
-                    )
-            except Exception as exc:
-                if conn.started:
-                    return  # mid-stream failure: close, don't corrupt
-                code = 3 if _is_client_error(exc) else 13
-                conn.sendall(
-                    (
-                        json.dumps({"status": code, "error": str(exc)[:500]})
-                        + "\n"
-                    ).encode()
-                )
-        except OSError:
-            pass  # client went away
-        except ValueError:
-            # intake-bound rejection on the preamble frame (forged /
-            # oversized length prefix, truncated header): the connection
-            # dies by design — catching it HERE (as h2's reader loop
-            # does) keeps the daemon thread exception-clean, so a real
-            # unexpected thread exception stays distinguishable from a
-            # rejected hostile preamble (VERDICT r10 "what's wrong" #2).
-            pass
-        finally:
-            try:
-                rf.close()
-                raw_conn.close()
-            except OSError:
-                pass
-
-    @staticmethod
-    def _ok(conn) -> None:
-        conn.started = True  # from here on, failures close the socket
-        conn.sendall(b'{"status": 0}\n')
-
-    def _query_unary(self, conn, body: bytes) -> None:
-        sql = decode_query_req(body)["queryStr"]
-        records = self.engine.query_unary(sql)  # may raise -> status line
-        self._ok(conn)
-        resp = {
-            "respRecord": [
-                {
-                    # the reference stamps the store's object id; the SQL
-                    # surface has no canonical row id, so the row ordinal
-                    # serves (documented deviation, same as server.py)
-                    "record_id": str(i),
-                    "attributes": rec,
-                }
-                for i, rec in enumerate(records)
-            ]
-        }
-        conn.sendall(frame(encode_query_resp(resp)))
-
-    def _query_stream(
-        self, conn, sql: str, view=None, updates_timeout: float = 5.0
-    ) -> None:
-        stream = self.engine.query_stream(
-            sql, view=view, typed=True, updates_timeout=updates_timeout
-        )
-        first = True
-        # snapshot-phase records buffer into bulk writes (one syscall /
-        # flow-control round per ~64 KB instead of per record — measured
-        # 2.6s -> bulk for a 20k-record stream); control records
-        # (END_OF_STREAM) and live pushes (UPDATEDELTA) flush
-        # IMMEDIATELY — they are the latency-sensitive part of the
-        # snapshot+subscribe contract
-        buf = bytearray()
-        for seq, rtype, attrs in stream:
-            if first:
-                self._ok(conn)  # defer OK until the query planned+ran
-                first = False
-            rec: dict = {"sequence_id": seq, "type": rtype}
-            if attrs is not None:
-                state = {
-                    "attributes": {
-                        k: _typed_value(v) for k, v in attrs.items()
-                    }
-                }
-                # payload arm follows the record type, as in the
-                # reference: STATE carries ObjectState, UPDATEDELTA a
-                # StateDelta (qpu.proto:16-28). The engine's view deltas
-                # surface post-update values only, so the delta's `old`
-                # side is absent (proto3 submessage non-presence).
-                payload = (
-                    {"delta": {"new": state}}
-                    if rtype == "UPDATEDELTA"
-                    else {"state": state}
-                )
-                rec["logOp"] = {
-                    "object_id": str(attrs.get("id", seq)),
-                    "bucket": "result",
-                    "payload": payload,
-                }
-            buf += frame(encode_response_stream_record(rec))
-            if rtype != "STATE" or len(buf) >= 65536:
-                conn.sendall(bytes(buf))
-                buf.clear()
-        if buf:
-            conn.sendall(bytes(buf))
-        if first:  # empty stream still gets its status + END_OF_STREAM
-            self._ok(conn)
-
-    def _query_ast_stream(self, conn, ast: dict) -> None:
-        """Serve the ASTQuery arm: translate onto the operator layer
-        (plans/astq.py) and stream STATE records + END_OF_STREAM — the
-        reference's QPU-to-QPU request path, same record shape as the
-        SQL arm."""
-        from proteus_spark.plans.astq import ast_query
-
-        df = ast_query(self.engine.spark, ast)
-        rows = df.collect()  # plan + run BEFORE the ack so errors map
-        self._ok(conn)       # to a status line, never a broken stream
-        seq = 0
-        buf = bytearray()
-        for row in rows:
-            attrs = row.asDict()
-            rec = {
-                "sequence_id": seq,
-                "type": "STATE",
-                "logOp": {
-                    "object_id": str(attrs.get("id", seq)),
-                    "bucket": ast.get("table", "result"),
-                    "payload": {
-                        "state": {
-                            "attributes": {
-                                k: _typed_value(v) for k, v in attrs.items()
-                            }
-                        }
-                    },
-                },
-            }
-            buf += frame(encode_response_stream_record(rec))
-            if len(buf) >= 65536:  # bulk writes, same as the SQL stream
-                conn.sendall(bytes(buf))
-                buf.clear()
-            seq += 1
-        buf += frame(
-            encode_response_stream_record(
-                {"sequence_id": seq, "type": "END_OF_STREAM"}
-            )
-        )
-        conn.sendall(bytes(buf))
-
-    def _get_config(self, conn) -> None:
-        tables = sorted(
-            t.name for t in self.engine.spark.catalog.listTables()
-        )
-        self._ok(conn)
-        resp = {"qpu_type": "DATASTORE_DRIVER", "schema": tables}
-        conn.sendall(frame(encode_config_response(resp)))
-
-
 _INT32_MIN, _INT32_MAX = -(1 << 31), (1 << 31) - 1
 
 
@@ -1080,155 +746,3 @@ def _typed_value(v) -> dict:
     if isinstance(v, float):
         return {"flt": v}
     return {"str": "" if v is None else str(v)}
-
-
-def _is_client_error(exc: Exception) -> bool:
-    name = type(exc).__name__
-    return "Analysis" in name or "Parse" in name or isinstance(exc, ValueError)
-
-
-def call_unary(host: str, port: int, sql: str) -> dict:
-    """Client helper: QueryUnary over the wire; returns the decoded
-    QueryResp dict. Raises RuntimeError on a non-zero status."""
-    import json
-    import socket
-
-    with socket.create_connection((host, port), timeout=30) as sk:
-        rf = sk.makefile("rb")
-        sk.sendall(b"QueryUnary\n" + frame(encode_query_req({"queryStr": sql})))
-        status = json.loads(rf.readline())
-        if status.get("status", 13) != 0:
-            raise RuntimeError(
-                f"grpc status {status.get('status')}: {status.get('error')}"
-            )
-        body = read_frame(rf)
-        if body is None:
-            # the server acked then died mid-response: a frame-boundary
-            # close is how _handle signals failure after streaming began
-            # (the status line is already on the wire) — decoding an
-            # empty dict here would be silent truncation (ADVICE r10)
-            raise RuntimeError("connection closed before QueryResp frame")
-        return decode_query_resp(body)
-
-
-def call_stream(
-    host: str,
-    port: int,
-    sql: str,
-    view: str | None = None,
-    updates_timeout: float | None = None,
-    stop_after_updates: int | None = None,
-) -> list[dict]:
-    """Client helper: the bidi ``Query`` over the wire — sends the
-    reference's RequestStreamRecord envelope; returns the decoded
-    ResponseStreamRecords. Without ``view`` the stream closes at
-    END_OF_STREAM; with a view name in the request metadata it keeps
-    reading UPDATEDELTA frames until the server ends the stream (quiet
-    timeout server-side; ``updates_timeout`` overrides the 5s default
-    via request metadata — a subscriber on a loaded host widens it so
-    a slow micro-batch is not mistaken for quiet).
-    ``stop_after_updates=N`` closes the stream CLIENT-side after the
-    Nth UPDATEDELTA instead of waiting out the server's quiet window —
-    a bounded consumer can then pair a wide quiet window with an
-    immediate return (the server handles the disconnect as any
-    client-went-away)."""
-    import json
-    import socket
-
-    req: dict = {
-        "queryRequest": {"query": {"query_sql": {"queryStr": sql}}}
-    }
-    if view is not None:
-        req["queryRequest"]["metadata"] = {"view": view}
-    if updates_timeout is not None:
-        req["queryRequest"].setdefault("metadata", {})[
-            "updates_timeout"
-        ] = str(updates_timeout)
-    out = []
-    with socket.create_connection((host, port), timeout=60) as sk:
-        rf = sk.makefile("rb")
-        sk.sendall(b"Query\n" + frame(encode_request_stream_record(req)))
-        status = json.loads(rf.readline())
-        if status.get("status", 13) != 0:
-            raise RuntimeError(
-                f"grpc status {status.get('status')}: {status.get('error')}"
-            )
-        saw_eos = False
-        n_updates = 0
-        while True:
-            body = read_frame(rf)
-            if body is None:
-                if not saw_eos:
-                    # mid-stream server failure closes at a frame
-                    # boundary (per _TrackedConn.started); PARTIAL
-                    # results must fail loudly, mirroring h2's
-                    # missing-grpc-status trailer path (ADVICE r10)
-                    raise RuntimeError(
-                        "connection closed before END_OF_STREAM"
-                    )
-                break  # view subscription: quiet-timeout close is clean
-            rec = decode_response_stream_record(body)
-            out.append(rec)
-            if rec["type"] == "END_OF_STREAM":
-                saw_eos = True
-                if view is None:
-                    break
-            elif rec["type"] == "UPDATEDELTA":
-                n_updates += 1
-                if (
-                    stop_after_updates is not None
-                    and n_updates >= stop_after_updates
-                ):
-                    break  # bounded consumer: close client-side
-    return out
-
-
-def call_ast(host: str, port: int, ast: dict) -> list[dict]:
-    """Client helper: the bidi ``Query`` carrying the ASTQuery arm (the
-    reference's internal representation); returns decoded
-    ResponseStreamRecords through END_OF_STREAM."""
-    import json
-    import socket
-
-    req = {"queryRequest": {"query": {"query_ast": ast}}}
-    out = []
-    with socket.create_connection((host, port), timeout=60) as sk:
-        rf = sk.makefile("rb")
-        sk.sendall(b"Query\n" + frame(encode_request_stream_record(req)))
-        status = json.loads(rf.readline())
-        if status.get("status", 13) != 0:
-            raise RuntimeError(
-                f"grpc status {status.get('status')}: {status.get('error')}"
-            )
-        while True:
-            body = read_frame(rf)
-            if body is None:
-                # EOF before END_OF_STREAM = mid-stream server failure
-                # (frame-boundary close); fail loudly (ADVICE r10)
-                raise RuntimeError("connection closed before END_OF_STREAM")
-            rec = decode_response_stream_record(body)
-            out.append(rec)
-            if rec["type"] == "END_OF_STREAM":
-                break
-    return out
-
-
-def call_get_config(host: str, port: int) -> dict:
-    """Client helper: GetConfig over the wire."""
-    import json
-    import socket
-
-    with socket.create_connection((host, port), timeout=30) as sk:
-        rf = sk.makefile("rb")
-        sk.sendall(b"GetConfig\n" + frame(encode_config_request()))
-        status = json.loads(rf.readline())
-        if status.get("status", 13) != 0:
-            raise RuntimeError(
-                f"grpc status {status.get('status')}: {status.get('error')}"
-            )
-        body = read_frame(rf)
-        if body is None:
-            raise RuntimeError(
-                "connection closed before ConfigResponse frame"
-            )
-        return decode_config_response(body)

@@ -1,12 +1,13 @@
-"""HTTP/2 + gRPC envelope parity (closes the wire-format stand-in):
-HPACK is pinned against RFC 7541's own Appendix C vectors byte-for-byte
-(not just round-trips), the framed server is driven end-to-end against
-a live Engine, and — decisively — interop is proven against REAL
-libnghttp2 clients (curl POST round-trip, nghttp with verbose trailer
-capture) when those binaries are present."""
+"""HTTP/2 + gRPC envelope parity, and the protobuf serving path end to
+end: HPACK is pinned against RFC 7541's own Appendix C vectors
+byte-for-byte (not just round-trips), ``GrpcQueryServer`` is driven
+end-to-end against a live Engine, and — decisively — interop is proven
+against REAL libnghttp2 clients (curl POST round-trip, nghttp with
+verbose trailer capture) when those binaries are present."""
 
 from __future__ import annotations
 
+import io
 import shutil
 import socket
 import struct
@@ -266,18 +267,8 @@ def test_grpc_unary_end_to_end(engine):
     want = engine.query_unary(sql)
     got = [r["attributes"] for r in resp["respRecord"]]
     assert got == want
-
-
-def test_grpc_matches_preamble_server_bytes(engine):
-    """The gRPC frames INSIDE the envelope are identical to what the
-    preamble-line server ships — only the transport changed."""
-    sql = "SELECT n_name FROM nation ORDER BY n_name LIMIT 2"
-    with h2.GrpcQueryServer(engine) as g, wire.ProtobufQueryServer(
-        engine
-    ) as p:
-        assert h2.call_unary(g.host, g.port, sql) == wire.call_unary(
-            p.host, p.port, sql
-        )
+    # record ids are the row ordinals
+    assert [r["record_id"] for r in resp["respRecord"]] == ["0", "1", "2"]
 
 
 def test_grpc_query_bidi_sql_and_ast(engine):
@@ -295,6 +286,29 @@ def test_grpc_query_bidi_sql_and_ast(engine):
         "orderBy": {"attributeName": "n_nationkey", "direction": "ASC"},
         "limit": 3,
     }
+    # RANGE is lb-inclusive / ub-exclusive and DESC orders: bound the
+    # range by region 1's second and last nation keys, so both bounds
+    # hit a row — the lower one is kept, the upper one dropped
+    keys = [
+        int(r["n_nationkey"])
+        for r in engine.query_unary(
+            "SELECT n_nationkey FROM nation WHERE n_regionkey = 1 "
+            "ORDER BY n_nationkey"
+        )
+    ]
+    ranged = dict(
+        ast,
+        predicate=ast["predicate"] + [
+            {
+                "attr": {"attr_key": "n_nationkey"},
+                "type": "RANGE",
+                "lbound": {"int": keys[1]},
+                "ubound": {"int": keys[-1]},
+            }
+        ],
+        orderBy={"attributeName": "n_nationkey", "direction": "DESC"},
+        limit=10,
+    )
     with h2.GrpcQueryServer(engine) as srv:
         recs = h2.call_query_sql(
             srv.host,
@@ -303,6 +317,7 @@ def test_grpc_query_bidi_sql_and_ast(engine):
             "ORDER BY n_nationkey LIMIT 3",
         )
         ast_recs = h2.call_ast(srv.host, srv.port, ast)
+        ranged_recs = h2.call_ast(srv.host, srv.port, ranged)
     assert recs[-1]["type"] == "END_OF_STREAM"
     assert ast_recs[-1]["type"] == "END_OF_STREAM"
 
@@ -312,6 +327,51 @@ def test_grpc_query_bidi_sql_and_ast(engine):
 
     assert [attrs(r) for r in recs[:-1]] == [attrs(r) for r in ast_recs[:-1]]
     assert len(recs) == 4
+    for rs in (recs, ast_recs):
+        assert [r["sequence_id"] for r in rs] == [0, 1, 2, 3]
+        # STATE records carry TYPED ObjectState Values (the reference's
+        # qpu.Value oneof): an int32-ranged bigint rides the int arm
+        st = rs[0]["logOp"]["payload"]["state"]["attributes"]
+        assert list(st["n_nationkey"]) == ["int"]
+    # AST STATE records carry the source table as the bucket
+    assert {r["logOp"]["bucket"] for r in ast_recs[:-1]} == {"nation"}
+    twin = engine.query_unary(
+        "SELECT n_nationkey, n_name FROM nation WHERE n_regionkey = 1 "
+        f"AND n_nationkey >= {keys[1]} AND n_nationkey < {keys[-1]} "
+        "ORDER BY n_nationkey DESC"
+    )
+    assert [attrs(r) for r in ranged_recs[:-1]] == [
+        {"n_nationkey": int(t["n_nationkey"]), "n_name": t["n_name"]}
+        for t in twin
+    ]
+    assert [int(t["n_nationkey"]) for t in twin] == keys[-2:0:-1]
+
+
+def test_grpc_ast_vectorclock_bound_rejected(engine):
+    """A VECTORCLOCK snapshot bound addresses a versioned view, not a
+    batch table — the server must reject it loudly (INVALID_ARGUMENT),
+    never silently serve LATEST."""
+    ast = {
+        "table": "lineitem",
+        "limit": 1,
+        "tsPredicate": {"lbound": {"type": "VECTORCLOCK"}},
+    }
+    with h2.GrpcQueryServer(engine) as srv:
+        with pytest.raises(RuntimeError, match="grpc-status 3"):
+            h2.call_ast(srv.host, srv.port, ast)
+
+
+def test_grpc_query_unknown_view_is_invalid_argument(engine):
+    """A ``view`` metadata key naming no served view fails with
+    INVALID_ARGUMENT — it must not degrade into a plain snapshot stream
+    whose client never learns it has no subscription (the NDJSON server
+    answers the same request with 400)."""
+    with h2.GrpcQueryServer(engine, views={}) as srv:
+        with pytest.raises(RuntimeError, match="grpc-status 3.*unknown view"):
+            h2.call_query_sql(
+                srv.host, srv.port,
+                "SELECT r_name FROM region ORDER BY r_name", view="nope",
+            )
 
 
 def test_grpc_subscribe_and_config(engine):
@@ -322,7 +382,8 @@ def test_grpc_subscribe_and_config(engine):
         cfg = h2.call_get_config(srv.host, srv.port)
     assert recs[-1]["type"] == "END_OF_STREAM"
     assert len(recs) == 6  # 5 regions + END_OF_STREAM
-    assert "region" in cfg["schema"]
+    assert cfg["qpu_type"] == "DATASTORE_DRIVER"
+    assert {"region", "lineitem", "orders"} <= set(cfg["schema"])
 
 
 def test_grpc_error_maps_to_trailers_only(engine):
@@ -333,6 +394,117 @@ def test_grpc_error_maps_to_trailers_only(engine):
         with pytest.raises(RuntimeError) as exc2:
             h2.call_unary(srv.host, srv.port, "NOT EVEN SQL ((")
         assert "grpc-status 3" in str(exc2.value)
+        # the failed calls must not wedge the server: a good query on a
+        # FRESH connection still answers
+        ok = h2.call_unary(srv.host, srv.port, "SELECT 1 AS one")
+        assert ok["respRecord"][0]["attributes"] == {"one": "1"}
+
+
+def test_grpc_midstream_failure_ends_with_error_trailers(engine):
+    """A failure AFTER response DATA has gone out (e.g. in the
+    view-update phase of a stream) ends the stream with a non-zero
+    grpc-status trailer: the DATA sent holds only whole gRPC frames and
+    no END_OF_STREAM record, the client helper raises instead of
+    returning partial results, and the server serves the next call."""
+
+    class _FlakyEngine:
+        def __init__(self, inner):
+            self._inner = inner
+
+        def __getattr__(self, name):
+            return getattr(self._inner, name)
+
+        def query_stream(self, sql, view=None, typed=False, **kw):
+            it = self._inner.query_stream(sql, view=view, typed=typed, **kw)
+
+            def gen():
+                for item in it:
+                    if item[1] == "END_OF_STREAM":
+                        raise RuntimeError("simulated mid-stream failure")
+                    yield item
+
+            return gen()
+
+    # ~130 KB of STATE records: the snapshot flushes at least one
+    # 64 KB DATA batch before the failure
+    sql = (
+        "SELECT l_orderkey AS id, repeat(l_returnflag, 100) AS pad "
+        "FROM lineitem ORDER BY l_orderkey, l_linenumber LIMIT 1000"
+    )
+    req = {"queryRequest": {"query": {"query_sql": {"queryStr": sql}}}}
+    with h2.GrpcQueryServer(_FlakyEngine(engine)) as srv:
+        cli = h2._H2Client(srv.host, srv.port)
+        try:
+            _h, data, trailers = cli.request(
+                "Query", wire.frame(wire.encode_request_stream_record(req))
+            )
+        finally:
+            cli.close()
+        assert dict(trailers)["grpc-status"] == "13"
+        assert data, "no DATA before the failure; raise LIMIT"
+        rdr = io.BytesIO(data)
+        types = []
+        while (body := wire.read_frame(rdr)) is not None:  # raises if torn
+            types.append(wire.decode_response_stream_record(body)["type"])
+        assert set(types) == {"STATE"}
+        with pytest.raises(RuntimeError, match="grpc-status 13"):
+            h2.call_query_sql(srv.host, srv.port, sql)
+        ok = h2.call_unary(srv.host, srv.port, "SELECT 1 AS one")
+        assert ok["respRecord"][0]["attributes"] == {"one": "1"}
+
+
+def test_grpc_forged_length_prefix_rejected_server_survives(engine):
+    """A forged 5-byte gRPC length prefix inside a DATA frame must not
+    drive a giant allocation: the call fails with INVALID_ARGUMENT and
+    the server keeps serving."""
+    huge = struct.pack(">BI", 0, (1 << 32) - 1) + b"x"
+    with h2.GrpcQueryServer(engine) as srv:
+        cli = h2._H2Client(srv.host, srv.port)
+        try:
+            _h, _d, trailers = cli.request("QueryUnary", huge)
+        finally:
+            cli.close()
+        assert dict(trailers)["grpc-status"] == "3"
+        assert "exceeds limit" in dict(trailers)["grpc-message"]
+        ok = h2.call_unary(srv.host, srv.port, "SELECT 1 AS one")
+        assert ok["respRecord"][0]["attributes"] == {"one": "1"}
+
+
+def test_client_raises_when_server_closes_after_response_headers():
+    """A server that sends the response HEADERS and then closes must
+    make the client raise, never decode an empty response."""
+    import threading
+
+    lsock = socket.create_server(("127.0.0.1", 0))
+    host, port = lsock.getsockname()[:2]
+
+    def serve():
+        conn, _ = lsock.accept()
+        rf = conn.makefile("rb")
+        h2.read_exact(rf, len(h2.PREFACE))
+        # read the whole request so the close is a clean FIN, not a RST
+        while True:
+            length, ftype, flags, _sid = h2.read_frame_header(rf)
+            h2.read_exact(rf, length)
+            if ftype == h2.F_DATA and flags & h2.FLAG_END_STREAM:
+                break
+        block = h2.HpackEncoder().encode(
+            [(":status", "200"), ("content-type", "application/grpc")]
+        )
+        conn.sendall(h2.pack_frame(h2.F_HEADERS, h2.FLAG_END_HEADERS, 1, block))
+        conn.shutdown(socket.SHUT_RDWR)
+        rf.close()
+        conn.close()
+
+    t = threading.Thread(target=serve, daemon=True)
+    t.start()
+    try:
+        with pytest.raises(RuntimeError, match="connection closed mid-response"):
+            h2.call_unary(host, port, "SELECT 1 AS one")
+        t.join(timeout=10)
+        assert not t.is_alive()
+    finally:
+        lsock.close()
 
 
 def test_grpc_unknown_method_and_service(engine):
@@ -398,7 +570,7 @@ def test_grpc_multiplexed_streams_one_connection(engine):
 
     def count(sid):
         resp = wire.decode_query_resp(
-            wire.read_frame(h2._BytesReader(bytes(data[sid])))
+            wire.read_frame(io.BytesIO(bytes(data[sid])))
         )
         return resp["respRecord"][0]["attributes"]["n"]
 
@@ -477,7 +649,7 @@ def test_grpc_flow_control_window_exhaustion(engine):
     assert trailers["grpc-status"] == "0"
     assert stalled_at is not None, "response fit the window; raise LIMIT"
     resp = wire.decode_query_resp(
-        wire.read_frame(h2._BytesReader(bytes(got)))
+        wire.read_frame(io.BytesIO(bytes(got)))
     )
     assert len(resp["respRecord"]) == 2000
 
@@ -511,8 +683,9 @@ def test_grpc_query_with_live_view_pushes_updatedelta(spark, engine):
             def consume():
                 # widened quiet window: the 5s default can close the
                 # stream before a loaded host lands the appended file's
-                # micro-batch (see the wire twin; the h2 client reads to
-                # trailers, so it pays the quiet tail — keep it modest)
+                # micro-batch (observed under a synthetic query-sweep
+                # load); the client reads to trailers, so it pays the
+                # quiet tail — keep it modest
                 recs.extend(
                     h2.call_query_sql(
                         srv.host, srv.port,
@@ -542,6 +715,11 @@ def test_grpc_query_with_live_view_pushes_updatedelta(spark, engine):
         assert types.count("STATE") == 2
         assert "END_OF_STREAM" in types
         assert types[-1] == "UPDATEDELTA"
+        assert [r["sequence_id"] for r in recs] == list(range(len(recs)))
+        # UPDATEDELTA carries the StateDelta payload arm (new side only
+        # — view deltas surface post-update values); STATE carries
+        # ObjectState
+        assert "state" in recs[0]["logOp"]["payload"]
         upd = recs[-1]["logOp"]["payload"]["delta"]["new"]["attributes"]
         assert upd["user_id"] == {"int": 2}
         assert upd["value_sum"] == {"flt": 27.0}
@@ -675,7 +853,7 @@ def test_curl_http2_grpc_unary_roundtrip(engine, tmp_path):
     code, version = out.stdout.split()
     assert (code, version) == ("200", "2")
     raw = (tmp_path / "resp.bin").read_bytes()
-    resp = wire.decode_query_resp(wire.read_frame(h2._BytesReader(raw)))
+    resp = wire.decode_query_resp(wire.read_frame(io.BytesIO(raw)))
     names = [r["attributes"]["n_name"] for r in resp["respRecord"]]
     want = [r["n_name"] for r in engine.query_unary(sql)]
     assert len(names) == 4 and names == want

@@ -2,14 +2,18 @@
 "missing" item): the hand-rolled proto3 codec must produce the REAL
 encoding — golden-byte tests pin it against hand-computed proto3 wire
 bytes (field numbers/types from the reference .proto files), round-trip
-tests cover every message incl. deep nesting, and socket tests run the
-gRPC-framed TCP server end-to-end against a live Engine."""
+tests cover every message incl. deep nesting, the gRPC message frame
+reader bounds a forged length, and socket tests carry these messages
+end-to-end through ``h2.GrpcQueryServer`` against a live Engine (the
+HTTP/2 envelope itself is pinned in tests/test_h2.py)."""
 
 from __future__ import annotations
 
+import io
+
 import pytest
 
-from proteus_spark import wire
+from proteus_spark import h2, wire
 from proteus_spark.engine import Engine
 
 
@@ -112,8 +116,6 @@ def test_config_response_golden():
 def test_grpc_frame_golden():
     # gRPC Length-Prefixed-Message: flag 0x00 + u32 BE length + payload
     assert wire.frame(b"abc") == b"\x00\x00\x00\x00\x03abc"
-    import io
-
     rf = io.BytesIO(b"\x00\x00\x00\x00\x03abc")
     assert wire.read_frame(rf) == b"abc"
     assert wire.read_frame(rf) is None  # clean EOF
@@ -223,8 +225,28 @@ def test_unknown_fields_are_skipped():
 
 
 # ---------------------------------------------------------------------------
-# Socket-level end-to-end against a live Engine
+# Socket-level end-to-end through the gRPC server against a live Engine
 # ---------------------------------------------------------------------------
+
+
+class _FailAfterFirstRecord:
+    """Engine proxy whose SQL stream fails once its first record is out:
+    the ack and that record reach the wire, then the stream breaks."""
+
+    def __init__(self, inner):
+        self._inner = inner
+
+    def __getattr__(self, name):
+        return getattr(self._inner, name)
+
+    def query_stream(self, sql, view=None, typed=False, **kw):
+        it = self._inner.query_stream(sql, view=view, typed=typed, **kw)
+
+        def gen():
+            yield next(it)
+            raise RuntimeError("simulated mid-stream failure")
+
+        return gen()
 
 
 def test_protobuf_query_unary_over_socket(engine):
@@ -232,8 +254,8 @@ def test_protobuf_query_unary_over_socket(engine):
         "SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n FROM orders "
         "GROUP BY o_orderpriority ORDER BY o_orderpriority"
     )
-    with wire.ProtobufQueryServer(engine) as srv:
-        resp = wire.call_unary(srv.host, srv.port, sql)
+    with h2.GrpcQueryServer(engine) as srv:
+        resp = h2.call_unary(srv.host, srv.port, sql)
     got = [r["attributes"] for r in resp["respRecord"]]
     assert got == engine.query_unary(sql)
     # record ids are the row ordinals, every value a string
@@ -244,8 +266,8 @@ def test_protobuf_query_unary_over_socket(engine):
 
 def test_protobuf_query_stream_state_then_eos(engine):
     sql = "SELECT l_orderkey FROM lineitem ORDER BY l_orderkey LIMIT 3"
-    with wire.ProtobufQueryServer(engine) as srv:
-        recs = wire.call_stream(srv.host, srv.port, sql)
+    with h2.GrpcQueryServer(engine) as srv:
+        recs = h2.call_query_sql(srv.host, srv.port, sql)
     assert [r["type"] for r in recs] == ["STATE"] * 3 + ["END_OF_STREAM"]
     assert [r["sequence_id"] for r in recs] == [0, 1, 2, 3]
     # STATE records carry TYPED ObjectState Values (the reference's
@@ -256,20 +278,21 @@ def test_protobuf_query_stream_state_then_eos(engine):
 
 def test_protobuf_get_config_advertises_tables(engine):
     engine.query_unary("SELECT 1 AS one")  # ensure views registered
-    with wire.ProtobufQueryServer(engine) as srv:
-        cfg = wire.call_get_config(srv.host, srv.port)
+    with h2.GrpcQueryServer(engine) as srv:
+        cfg = h2.call_get_config(srv.host, srv.port)
     assert cfg["qpu_type"] == "DATASTORE_DRIVER"
     assert "lineitem" in cfg["schema"] and "orders" in cfg["schema"]
 
 
 def test_protobuf_query_with_live_view_pushes_updatedelta(spark, engine):
-    """The bidi Query over the wire format: the RequestStreamRecord's
+    """The bidi Query in the wire format: the RequestStreamRecord's
     metadata names a live view; the stream serves STATE* +
     END_OF_STREAM, stays open, and a new micro-batch arrives as an
     UPDATEDELTA ResponseStreamRecord whose logOp carries the changed
     group — the reference's snapshot+subscribe composite, protobuf
     edition."""
     import threading
+    import time as _time
 
     from proteus_spark.sources import cdc
     from proteus_spark.streaming.views import SumView
@@ -287,23 +310,20 @@ def test_protobuf_query_with_live_view_pushes_updatedelta(spark, engine):
         engine.register_view("vwire", view.snapshot())
         recs: list = []
         done = threading.Event()
-        with wire.ProtobufQueryServer(engine, views={"live": view}) as srv:
+        with h2.GrpcQueryServer(engine, views={"live": view}) as srv:
 
             def consume():
-                # wide quiet window + client-side stop after the one
-                # expected delta: on a loaded host the gap between
+                # widened quiet window: on a loaded host the gap between
                 # END_OF_STREAM and the appended file's micro-batch can
                 # exceed the 5s default quiet close, ending the stream
-                # with no UPDATEDELTA (observed once under a synthetic
-                # query-sweep load, round 14)
+                # with no UPDATEDELTA
                 recs.extend(
-                    wire.call_stream(
+                    h2.call_query_sql(
                         srv.host,
                         srv.port,
                         "SELECT * FROM vwire ORDER BY user_id",
                         view="live",
-                        updates_timeout=60,
-                        stop_after_updates=1,
+                        updates_timeout=30,
                     )
                 )
                 done.set()
@@ -314,8 +334,6 @@ def test_protobuf_query_with_live_view_pushes_updatedelta(spark, engine):
             # engine registers it before the snapshot runs, so any delta
             # from here on is captured — view.version alone is already
             # >0 after catch-up and guarantees nothing about the server)
-            import time as _time
-
             t0 = _time.monotonic()
             while not view._subscribers and _time.monotonic() - t0 < 30:
                 _time.sleep(0.05)
@@ -340,6 +358,101 @@ def test_protobuf_query_with_live_view_pushes_updatedelta(spark, engine):
     finally:
         view.stop()
         cdc.cleanup(src)
+
+
+def test_protobuf_ast_query_matches_sql_twin(engine):
+    """Socket-level: an ASTQuery (RANGE lb-incl/ub-excl + EQ +
+    projection + ORDER BY DESC + LIMIT) over the wire returns exactly
+    the rows of its SQL twin — one semantics behind two entry
+    representations."""
+    ast = {
+        "table": "lineitem",
+        "projection": ["l_orderkey", "l_quantity"],
+        "predicate": [
+            {
+                "attr": {"attr_key": "l_quantity"},
+                "type": "RANGE",
+                "lbound": {"flt": 10.0},
+                "ubound": {"flt": 12.0},
+            },
+            {
+                "attr": {"attr_key": "l_linenumber"},
+                "type": "EQ",
+                "lbound": {"int": 1},
+                "ubound": {"int": 1},
+            },
+        ],
+        "orderBy": {"attributeName": "l_orderkey", "direction": "DESC"},
+        "limit": 4,
+    }
+    with h2.GrpcQueryServer(engine) as srv:
+        recs = h2.call_ast(srv.host, srv.port, ast)
+    assert [r["type"] for r in recs][-1] == "END_OF_STREAM"
+    got = [
+        r["logOp"]["payload"]["state"]["attributes"]
+        for r in recs
+        if r["type"] == "STATE"
+    ]
+    twin = engine.query_unary(
+        "SELECT l_orderkey, l_quantity FROM lineitem "
+        "WHERE l_quantity >= 10.0 AND l_quantity < 12.0 "
+        "AND l_linenumber = 1 ORDER BY l_orderkey DESC LIMIT 4"
+    )
+    assert len(got) == len(twin) == 4
+    for g, t in zip(got, twin):
+        assert str(g["l_orderkey"]["int"]) == t["l_orderkey"]
+        assert str(g["l_quantity"]["flt"]) == t["l_quantity"]
+    # STATE records carry the source table as the bucket
+    assert recs[0]["logOp"]["bucket"] == "lineitem"
+
+
+def test_protobuf_error_maps_to_grpc_status(engine):
+    with h2.GrpcQueryServer(engine) as srv:
+        with pytest.raises(RuntimeError, match="grpc-status"):
+            h2.call_unary(srv.host, srv.port, "SELECT * FROM no_such_table")
+        # the call error must not wedge the server: a good query on a
+        # FRESH connection still answers
+        ok = h2.call_unary(srv.host, srv.port, "SELECT 1 AS one")
+        assert ok["respRecord"][0]["attributes"] == {"one": "1"}
+
+
+def test_protobuf_midstream_failure_closes_connection_not_status_line(engine):
+    """A failure AFTER the stream has produced records (e.g. in the
+    view-update phase of a stream) must never surface in-band, where it
+    would interleave into the frame stream: it ends the stream with a
+    non-zero grpc-status in the closing HEADERS block, leaving only
+    whole gRPC frames in the DATA and no END_OF_STREAM record, so the
+    client sees an honest truncation. (The same failure after a flushed
+    DATA batch is tests/test_h2.py's mid-stream test.)"""
+    sql = "SELECT l_orderkey FROM lineitem ORDER BY l_orderkey LIMIT 3"
+    req = {"queryRequest": {"query": {"query_sql": {"queryStr": sql}}}}
+    with h2.GrpcQueryServer(_FailAfterFirstRecord(engine)) as srv:
+        cli = h2._H2Client(srv.host, srv.port)
+        try:
+            _hdrs, data, trailers = cli.request(
+                "Query", wire.frame(wire.encode_request_stream_record(req))
+            )
+        finally:
+            cli.close()
+        assert dict(trailers)["grpc-status"] == "13"
+        # whatever made it out is whole frames, none of them END_OF_STREAM
+        rdr = io.BytesIO(data)
+        types = []
+        while (body := wire.read_frame(rdr)) is not None:  # raises if torn
+            types.append(wire.decode_response_stream_record(body)["type"])
+        assert "END_OF_STREAM" not in types
+        # and the failed stream must not wedge the server for new conns
+        ok = h2.call_unary(srv.host, srv.port, "SELECT 1 AS one")
+        assert ok["respRecord"][0]["attributes"] == {"one": "1"}
+
+
+def test_client_helpers_raise_on_eof_before_end_of_stream(engine):
+    """A mid-stream server failure must make the bundled client FAIL
+    LOUDLY, never return the PARTIAL records that reached it."""
+    sql = "SELECT l_orderkey FROM lineitem ORDER BY l_orderkey LIMIT 3"
+    with h2.GrpcQueryServer(_FailAfterFirstRecord(engine)) as srv:
+        with pytest.raises(RuntimeError, match="grpc-status"):
+            h2.call_query_sql(srv.host, srv.port, sql)
 
 
 def test_ast_query_roundtrip_and_golden():
@@ -378,66 +491,6 @@ def test_ast_query_roundtrip_and_golden():
         wire.encode_request_stream_record(env)
     )
     assert got_env["queryRequest"]["query"]["query_ast"] == ast
-
-
-def test_protobuf_ast_query_matches_sql_twin(engine):
-    """Socket-level: an ASTQuery (RANGE lb-incl/ub-excl + EQ +
-    projection + ORDER BY DESC + LIMIT) over the wire returns exactly
-    the rows of its SQL twin — one semantics behind two entry
-    representations."""
-    ast = {
-        "table": "lineitem",
-        "projection": ["l_orderkey", "l_quantity"],
-        "predicate": [
-            {
-                "attr": {"attr_key": "l_quantity"},
-                "type": "RANGE",
-                "lbound": {"flt": 10.0},
-                "ubound": {"flt": 12.0},
-            },
-            {
-                "attr": {"attr_key": "l_linenumber"},
-                "type": "EQ",
-                "lbound": {"int": 1},
-                "ubound": {"int": 1},
-            },
-        ],
-        "orderBy": {"attributeName": "l_orderkey", "direction": "DESC"},
-        "limit": 4,
-    }
-    with wire.ProtobufQueryServer(engine) as srv:
-        recs = wire.call_ast(srv.host, srv.port, ast)
-    assert [r["type"] for r in recs][-1] == "END_OF_STREAM"
-    got = [
-        r["logOp"]["payload"]["state"]["attributes"]
-        for r in recs
-        if r["type"] == "STATE"
-    ]
-    twin = engine.query_unary(
-        "SELECT l_orderkey, l_quantity FROM lineitem "
-        "WHERE l_quantity >= 10.0 AND l_quantity < 12.0 "
-        "AND l_linenumber = 1 ORDER BY l_orderkey DESC LIMIT 4"
-    )
-    assert len(got) == len(twin) == 4
-    for g, t in zip(got, twin):
-        assert str(g["l_orderkey"]["int"]) == t["l_orderkey"]
-        assert str(g["l_quantity"]["flt"]) == t["l_quantity"]
-    # STATE records carry the source table as the bucket
-    assert recs[0]["logOp"]["bucket"] == "lineitem"
-
-
-def test_protobuf_ast_query_vectorclock_bound_rejected(engine):
-    """A VECTORCLOCK snapshot bound addresses a versioned view, not a
-    batch table — the server must reject it loudly (INVALID_ARGUMENT),
-    never silently serve LATEST."""
-    ast = {
-        "table": "lineitem",
-        "limit": 1,
-        "tsPredicate": {"lbound": {"type": "VECTORCLOCK"}},
-    }
-    with wire.ProtobufQueryServer(engine) as srv:
-        with pytest.raises(RuntimeError, match="grpc status 3"):
-            wire.call_ast(srv.host, srv.port, ast)
 
 
 def test_ast_query_predicates_push_to_scan(spark, engine):
@@ -484,77 +537,11 @@ def test_typed_value_mapping():
     assert wire._typed_value("x") == {"str": "x"}
 
 
-def test_protobuf_error_maps_to_grpc_status(engine):
-    with wire.ProtobufQueryServer(engine) as srv:
-        with pytest.raises(RuntimeError, match="grpc status"):
-            wire.call_unary(srv.host, srv.port, "SELECT * FROM no_such_table")
-        # the connection error must not wedge the server: a good query
-        # on a FRESH connection still answers
-        ok = wire.call_unary(srv.host, srv.port, "SELECT 1 AS one")
-        assert ok["respRecord"][0]["attributes"] == {"one": "1"}
-
-
-def test_protobuf_midstream_failure_closes_connection_not_status_line(engine):
-    """A failure AFTER the ack + frames have gone out (e.g. in the
-    view-update phase of a stream) can no longer be reported as a JSON
-    status line — that would interleave into the frame stream and parse
-    as a corrupt frame header. The server must close the connection
-    instead (the preamble-transport analogue of the h2 subclass's error
-    trailers), leaving only whole frames on the wire and no
-    END_OF_STREAM, so the client sees an honest truncation."""
-    import io
-    import json
-    import socket
-
-    class _FlakyEngine:
-        def __init__(self, inner):
-            self._inner = inner
-
-        def __getattr__(self, name):
-            return getattr(self._inner, name)
-
-        def query_stream(self, sql, view=None, typed=False, **kw):
-            it = self._inner.query_stream(sql, view=view, typed=typed, **kw)
-
-            def gen():
-                yield next(it)  # the ack + first record reach the wire
-                raise RuntimeError("simulated view-update failure")
-
-            return gen()
-
-    sql = "SELECT l_orderkey FROM lineitem ORDER BY l_orderkey LIMIT 3"
-    req = {"queryRequest": {"query": {"query_sql": {"queryStr": sql}}}}
-    with wire.ProtobufQueryServer(_FlakyEngine(engine)) as srv:
-        with socket.create_connection((srv.host, srv.port), timeout=30) as sk:
-            rf = sk.makefile("rb")
-            sk.sendall(
-                b"Query\n" + wire.frame(wire.encode_request_stream_record(req))
-            )
-            status = json.loads(rf.readline())
-            assert status["status"] == 0  # acked before the failure
-            rest = rf.read()  # server closes the socket: read to EOF
-        # the failure must NOT surface as a second status line
-        assert b'{"status"' not in rest
-        # whatever made it out is whole frames, none of them END_OF_STREAM
-        rdr = io.BytesIO(rest)
-        types = []
-        while True:
-            body = wire.read_frame(rdr)  # raises on a torn frame
-            if body is None:
-                break
-            types.append(wire.decode_response_stream_record(body)["type"])
-        assert "END_OF_STREAM" not in types
-        # and the failed stream must not wedge the server for new conns
-        ok = wire.call_unary(srv.host, srv.port, "SELECT 1 AS one")
-        assert ok["respRecord"][0]["attributes"] == {"one": "1"}
-
-
-def test_forged_length_prefix_rejected_and_server_survives(engine):
+def test_forged_length_prefix_rejected_and_server_survives():
     """A forged 5-byte length prefix must not drive a giant allocation:
-    read_frame raises above MAX_MESSAGE_BYTES, the violating connection
-    tears down, and a fresh connection serves normally."""
-    import io
-    import socket
+    read_frame raises above MAX_MESSAGE_BYTES. The server half (the
+    violating stream fails, the server keeps serving) is
+    tests/test_h2.py::test_grpc_forged_length_prefix_rejected_server_survives."""
     import struct
 
     huge = struct.pack(">BI", 0, (1 << 32) - 1)
@@ -566,123 +553,37 @@ def test_forged_length_prefix_rejected_and_server_survives(engine):
     with pytest.raises(ValueError, match="truncated frame payload"):
         wire.read_frame(io.BytesIO(ok_len))
 
-    with wire.ProtobufQueryServer(engine) as srv:
-        bad = socket.create_connection((srv.host, srv.port), timeout=10)
-        bad.sendall(b"QueryUnary\n" + huge)
-        bad.settimeout(10)
-        while True:
-            chunk = bad.recv(65536)
-            if not chunk:
-                break
-        bad.close()
-        ok = wire.call_unary(srv.host, srv.port, "SELECT 1 AS one")
-        assert ok["respRecord"][0]["attributes"] == {"one": "1"}
-
-
-def test_client_helpers_raise_on_eof_before_end_of_stream(engine):
-    """ADVICE r10: mid-stream server failure closes the socket at a
-    frame boundary — the bundled clients must FAIL LOUDLY on that EOF,
-    never return PARTIAL results (call_stream/call_ast) or decode an
-    empty dict (call_unary/call_get_config). Mirrors h2's _grpc_call,
-    which already fails via the missing grpc-status trailer."""
-
-    class _FlakyEngine:
-        def __init__(self, inner):
-            self._inner = inner
-
-        def __getattr__(self, name):
-            return getattr(self._inner, name)
-
-        def query_stream(self, sql, view=None, typed=False, **kw):
-            it = self._inner.query_stream(sql, view=view, typed=typed, **kw)
-
-            def gen():
-                yield next(it)  # ack + first record reach the wire
-                raise RuntimeError("simulated mid-stream failure")
-
-            return gen()
-
-    sql = "SELECT l_orderkey FROM lineitem ORDER BY l_orderkey LIMIT 3"
-    with wire.ProtobufQueryServer(_FlakyEngine(engine)) as srv:
-        with pytest.raises(RuntimeError, match="before END_OF_STREAM"):
-            wire.call_stream(srv.host, srv.port, sql)
-
-
-def test_clients_raise_when_server_closes_after_ack_before_frames():
-    """The EOF arms of the remaining clients: a server that acks the
-    status line then dies before any response frame must make
-    call_unary/call_get_config raise (not decode {}) and call_ast raise
-    (not return an empty record list)."""
-    import json
-    import socket
-    import threading
-
-    srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-    srv.bind(("127.0.0.1", 0))
-    srv.listen(4)
-    host, port = srv.getsockname()
-    stop = threading.Event()
-
-    def serve():
-        while not stop.is_set():
-            try:
-                conn, _ = srv.accept()
-            except OSError:
-                return
-            rf = conn.makefile("rb")
-            rf.readline()  # method line
-            wire.read_frame(rf)  # request frame
-            conn.sendall(json.dumps({"status": 0}).encode() + b"\n")
-            # close without sending the response frame (shutdown first:
-            # the makefile dup would otherwise hold the fd open)
-            try:
-                conn.shutdown(socket.SHUT_RDWR)
-            except OSError:
-                pass
-            rf.close()
-            conn.close()
-
-    t = threading.Thread(target=serve, daemon=True)
-    t.start()
-    try:
-        with pytest.raises(RuntimeError, match="before QueryResp"):
-            wire.call_unary(host, port, "SELECT 1 AS one")
-        with pytest.raises(RuntimeError, match="before ConfigResponse"):
-            wire.call_get_config(host, port)
-        with pytest.raises(RuntimeError, match="before END_OF_STREAM"):
-            wire.call_ast(host, port, {"table": "lineitem"})
-    finally:
-        stop.set()
-        srv.close()
-
 
 def test_updates_timeout_metadata_parse_and_clamp():
     """The per-request quiet-close window rides QueryRequest.metadata as
     a string (parity with the NDJSON server's request-level knob) and is
-    intake-bounded: [0, 300], malformed -> the 5s default."""
-    assert wire._updates_timeout({}) == 5.0
-    assert wire._updates_timeout({"updates_timeout": "45"}) == 45.0
-    assert wire._updates_timeout({"updates_timeout": "0"}) == 0.0
-    assert wire._updates_timeout({"updates_timeout": "1e9"}) == 300.0
-    assert wire._updates_timeout({"updates_timeout": "-3"}) == 0.0
-    assert wire._updates_timeout({"updates_timeout": "bogus"}) == 5.0
-    # non-finite floats survive min/max clamping unchanged and
-    # Queue.get(timeout=nan) blocks forever — they must fall back to the
-    # default like any other malformed value (ADVICE r14)
-    assert wire._updates_timeout({"updates_timeout": "nan"}) == 5.0
-    assert wire._updates_timeout({"updates_timeout": "inf"}) == 5.0
-    assert wire._updates_timeout({"updates_timeout": "-inf"}) == 5.0
-    # the NDJSON server and Engine.query_stream ride the same clamp
+    intake-bounded by the one shared clamp the gRPC handler calls on the
+    metadata value: [0, 300], absent or malformed -> the 5s default."""
     from proteus_spark.engine import clamp_updates_timeout
 
+    cases = [
+        ({}, 5.0),
+        ({"updates_timeout": "45"}, 45.0),
+        ({"updates_timeout": "0"}, 0.0),
+        ({"updates_timeout": "1e9"}, 300.0),
+        ({"updates_timeout": "-3"}, 0.0),
+        ({"updates_timeout": "bogus"}, 5.0),
+        # non-finite floats survive min/max clamping unchanged and
+        # Queue.get(timeout=nan) blocks forever — they must fall back to
+        # the default like any other malformed value (ADVICE r14)
+        ({"updates_timeout": "nan"}, 5.0),
+        ({"updates_timeout": "inf"}, 5.0),
+        ({"updates_timeout": "-inf"}, 5.0),
+    ]
+    for meta, want in cases:
+        assert clamp_updates_timeout(meta.get("updates_timeout")) == want
+    # the NDJSON server and Engine.query_stream ride the same clamp
     assert clamp_updates_timeout(float("nan")) == 5.0
     assert clamp_updates_timeout("inf") == 5.0
     assert clamp_updates_timeout(1e12) == 300.0
     assert clamp_updates_timeout(None) == 5.0
     assert clamp_updates_timeout("45") == 45.0
     # the client helper threads it through the metadata map verbatim
-    req = {"queryRequest": {"query": {"query_sql": {"queryStr": "x"}}},
-           }
     enc = wire.encode_request_stream_record(
         {"queryRequest": {"query": {"query_sql": {"queryStr": "SELECT 1"}},
                           "metadata": {"view": "live",
@@ -690,4 +591,4 @@ def test_updates_timeout_metadata_parse_and_clamp():
     )
     dec = wire.decode_request_stream_record(enc)["queryRequest"]
     assert dec["metadata"]["updates_timeout"] == "60"
-    assert wire._updates_timeout(dec["metadata"]) == 60.0
+    assert clamp_updates_timeout(dec["metadata"].get("updates_timeout")) == 60.0
