@@ -49,10 +49,10 @@ def _sink_append(df, outdir: str) -> None:
     tags=("streaming",),
 )
 def stream_sum_view(spark, sf_dir):
-    """SumQPU end-to-end: events replayed as 4 micro-batches through a
-    streaming update-mode aggregation; state merged per batch into the
-    versioned view; final snapshot == batch GROUP BY (sum.go:90-103
-    catch-up + 250-285 incremental apply)."""
+    """SumQPU end-to-end: events replayed as 4 micro-batches; each batch's
+    per-group sum is added into the versioned view's one state; final
+    snapshot == batch GROUP BY (sum.go:90-103 catch-up + 250-285
+    incremental apply)."""
     ev = load(spark, sf_dir, "events").select("user_id", "value")
     src = cdc.stage_stream(spark, ev, chunks=4)
     view = SumView(

@@ -36,9 +36,9 @@ _SQL_TYPES = {
 class JDBCStateMirror:
     """Mirror a view's changed-group totals into a JDBC table.
 
-    Use with update-mode views whose subscriber deltas carry NEW TOTALS
-    per changed key (SumView mode='append', JoinView snapshots): the MERGE
-    overwrites matched keys — writeState parity. Pass it to
+    Use with views whose subscriber deltas carry NEW TOTALS per changed
+    key (SumView mode='append', JoinView snapshots): the MERGE overwrites
+    matched keys — writeState parity. Pass it to
     ``view.subscribe(mirror.on_delta, durable=True)`` — the mirror is a
     durability-bearing sink: a swallowed transient JDBC error after the
     state commit would checkpoint the epoch with the mirror missing those

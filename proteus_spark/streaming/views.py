@@ -9,17 +9,17 @@ and writes only its per-record apply.
 
 Spark shape used here — one view core (``_View``) with one lifecycle and
 one commit path; the view kinds (``SumView``, ``JoinView``,
-``HistoryView``) vary only the merge policy, the streaming writer and the
-batch->delta transform:
+``HistoryView``) vary only the merge policy and the batch->delta
+transform:
 
-- one Structured-Streaming query per view; Spark's state store replaces the
-  reference's hand-rolled in-process maps (sum.go:49-59) — partitioned,
-  spillable, fault-tolerant;
+- one stateless Structured-Streaming query per view: the LSM state table
+  below is the view's ONE state, in place of the reference's hand-rolled
+  in-process maps (sum.go:49-59) — partitioned, spillable, durable;
 - ``foreachBatch`` appends each micro-batch's delta rows into a
   HASH-BUCKET-PARTITIONED LSM state table (``_BucketedState``): commits
   write O(|delta|) bytes full stop, reads collapse each bucket's
-  base+delta chain through the view's merge policy (replace, add,
-  coalesce or distinct), and a bucket compacts only when its pending
+  base+delta chain through the view's merge policy (add, coalesce or
+  distinct), and a bucket compacts only when its pending
   deltas reach its base size (amortized O(delta) maintenance) — the
   log-structured analogue of the reference's per-row B-tree UPSERT sink
   (internal/qpustate/mysql_backend/mysql_backend.go:147-254), and the
@@ -56,30 +56,20 @@ class _Merge:
     """Merge-on-read policy: collapse the union of a bucket's base +
     delta rows (each stamped with its commit version ``_v``) to one row
     per key. Implementations are pure DataFrame aggregations, so the
-    collapse runs as one hash aggregate across executors."""
+    collapse runs as one hash aggregate across executors. Each policy's
+    ``kind`` rides the manifests it commits (see ``recover``)."""
 
     def collapse(self, df: DataFrame, key: str) -> DataFrame:  # pragma: no cover
         raise NotImplementedError
 
 
-class _ReplaceMerge(_Merge):
-    """Latest version wins wholesale (update-mode aggregation emits each
-    group's NEW total, so the newest row IS the state)."""
-
-    def collapse(self, df: DataFrame, key: str) -> DataFrame:
-        cols = [c for c in df.columns if c not in (key, "_v")]
-        return (
-            df.groupBy(key)
-            .agg(F.max_by(F.struct(*cols), "_v").alias("_s"))
-            .select(key, *[F.col(f"_s.{c}").alias(c) for c in cols])
-        )
-
-
 class _AddMerge(_Merge):
-    """Deltas are additive contributions (CDC new-minus-old); state is
-    their running sum. Commutative+associative, so base rows produced by
-    compaction are just partial sums. ``_ts`` folds as max (vector-clock
-    join, qpu.proto:97-99)."""
+    """Deltas are additive per-batch contributions; state is their running
+    sum. Commutative+associative, so base rows produced by compaction are
+    just partial sums. ``_ts`` folds as max (vector-clock join,
+    qpu.proto:97-99)."""
+
+    kind = "add"
 
     def __init__(self, sum_col: str):
         self.sum_col = sum_col
@@ -96,6 +86,8 @@ class _CoalesceMerge(_Merge):
     a DELETE tombstone at version v kills everything <= v (a later
     re-insert revives the key); keys with no live rows disappear.
     Missing attributes fall to their declared defaults (join.go:414-423)."""
+
+    kind = "coalesce"
 
     def __init__(self, defaults: dict[str, float]):
         self.defaults = defaults
@@ -134,6 +126,8 @@ class _DistinctMerge(_Merge):
     dedups exact replays (at-least-once replay safety). Idempotent under
     compaction: a folded base is the distinct union of its chain, and
     re-collapsing base + new deltas changes nothing already folded."""
+
+    kind = "distinct"
 
     def collapse(self, df: DataFrame, key: str) -> DataFrame:
         return df.drop("_v").distinct()
@@ -475,6 +469,7 @@ class _BucketedState:
                     # high-water mark only advances after the publish
                     "epoch": self.last_epoch if epoch is None else epoch,
                     "n_buckets": self.n_buckets,
+                    "merge": self.merge.kind,
                 },
                 f,
             )
@@ -483,7 +478,9 @@ class _BucketedState:
     def recover(self) -> int:
         """Rebuild the manifest list from the persisted commit log (e.g.
         after a driver restart): returns the recovered latest version, or
-        -1 for an empty/new state dir."""
+        -1 for an empty/new state dir. Refuses (ValueError) a root committed
+        under another merge kind, or under none when this merge adds: an
+        old append-mode SumView root holds TOTALS the add merge would sum."""
         import json
         import re as _re
 
@@ -496,6 +493,14 @@ class _BucketedState:
                 if mt:
                     with open(os.path.join(self.root, fname)) as f:
                         raw = json.load(f)
+                    kind = raw.get("merge")
+                    if kind != self.merge.kind and (
+                        kind is not None or isinstance(self.merge, _AddMerge)
+                    ):
+                        raise ValueError(
+                            f"{self.root}/{fname}: committed under merge "
+                            f"{kind!r}, this view merges {self.merge.kind!r}"
+                        )
                     buckets = raw.get("buckets", raw)  # legacy: bare map
                     found[int(mt.group(1))] = {
                         int(b): tuple(chain) for b, chain in buckets.items()
@@ -607,9 +612,10 @@ class _View:
     (qpu.go:72-75 — start, catch-up gate, then deltas forever), its one
     per-batch commit path and its query surface. A view kind supplies only
     what the reference's operators write themselves (sum.go:90-103): its
-    merge policy (passed in), its streaming writer (``_writer``), its
-    batch->delta transform (``_delta``) and an optional post-commit step
-    (``_after_commit``).
+    merge policy (passed in), its batch->delta transform (``_delta``), an
+    optional post-commit step (``_after_commit``) and what its subscribers
+    receive (``_published``). Every kind streams raw input rows in append
+    output mode into ``_on_batch``.
 
     ``root`` pins the state+checkpoint location so the view can be
     STOPPED AND RESTARTED in place — the new instance recovers the LSM
@@ -654,13 +660,6 @@ class _View:
         self._query = None
 
     # -- per-kind hooks ------------------------------------------------------
-    def _writer(self):
-        """The streaming writer feeding ``_on_batch``: raw input rows,
-        append output mode."""
-        return self._stream.writeStream.outputMode("append").foreachBatch(
-            self._on_batch
-        )
-
     def _delta(self, batch: DataFrame) -> DataFrame:
         """Batch -> the rows to commit (no ``_bucket`` yet)."""
         return batch
@@ -668,10 +667,15 @@ class _View:
     def _after_commit(self, prev_v: int, new_v: int) -> None:
         """Runs after the state commit, before subscriber dispatch."""
 
+    def _published(self, delta: DataFrame) -> DataFrame:
+        """The committed delta -> what subscribers receive."""
+        return delta
+
     # -- lifecycle -----------------------------------------------------------
     def start(self):
         self._query = (
-            self._writer()
+            self._stream.writeStream.outputMode("append")
+            .foreachBatch(self._on_batch)
             .option("checkpointLocation", self._ckpt)
             .queryName(self.name)
             .start()
@@ -743,9 +747,9 @@ class _View:
             # With subscribers registered, the delta plan would otherwise
             # EXECUTE TWICE per batch — once for the state commit's write
             # and once when the dispatch fan-out's consumers act on it (for
-            # an update-mode aggregation that is the whole agg + state-store
-            # pass again; measured ~2x the batch cost on the CDF-export
-            # views, optimization r16 / guide §1). One eager localCheckpoint
+            # a SumView that is the whole per-batch aggregate again;
+            # measured ~2x the batch cost on the CDF-export views,
+            # optimization r16 / guide §1). One eager localCheckpoint
             # makes the commit write and every subscriber read the same
             # materialized blocks; released deterministically after the
             # fan-out (consumers act synchronously inside their callback —
@@ -797,9 +801,14 @@ class _View:
         (review r14 #2): aborting the loop mid-way would starve the
         subscribers registered after the failing one — in-process observers
         have no replay to catch them up, so the one-callback-per-version
-        counting they rely on would silently break."""
+        counting they rely on would silently break. Without subscribers
+        nothing is resolved, ``_published`` included."""
+        subscribers = list(self._subscribers)
+        if not subscribers:
+            return
+        delta = self._published(delta)
         durable_err: Exception | None = None
-        for cb, durable in list(self._subscribers):
+        for cb, durable in subscribers:
             try:
                 cb(delta, epoch)
             except Exception as exc:
@@ -836,7 +845,8 @@ class _View:
     def subscribe(
         self, cb: Callable[[DataFrame, int], None], durable: bool = False
     ) -> None:
-        """QuerySubscribe parity: cb(delta_df, epoch) per micro-batch.
+        """QuerySubscribe parity: cb(delta_df, epoch) per micro-batch;
+        the view kind's ``_published`` says what ``delta_df`` holds.
 
         ``durable=True`` marks a durability-bearing subscriber (a CDF
         exporter, a state mirror): its exceptions PROPAGATE out of
@@ -888,17 +898,17 @@ class _View:
 class SumView(_View):
     """Streaming GROUP-BY-SUM materialized view (SumQPU parity, SURVEY §2.4).
 
-    Two input shapes:
+    One state, as the reference's SumQPU adds each delta to one running
+    total per group (sum.go:250-285): each batch's per-group contribution,
+    a stateless batch aggregate, commits under the add merge; the epoch
+    guard keeps a replayed batch from counting twice. Two input shapes:
 
-    - mode='append': plain insert stream; Spark's streaming aggregation
-      (update output mode) maintains running totals in the state store and
-      emits only changed groups per batch — exactly the incremental
-      semantics of sum.go:250-285, minus the races.
-    - mode='cdc': UPDATEDELTA records (old_value/new_value); each batch's
-      per-group contribution = sum(coalesce(new,0) - coalesce(old,0)) is
-      added to the state table (delta application parity, sum.go:250-285).
-      DELETE records (old image, no new) therefore subtract — the
-      generalization the reference's sum QPU never shipped.
+    - mode='append': plain insert stream; contribution = sum(agg_attr).
+      Subscribers receive each touched group's NEW total.
+    - mode='cdc': UPDATEDELTA records (old_value/new_value); contribution
+      = sum(coalesce(new,0) - coalesce(old,0)). DELETE records (old image,
+      no new) therefore subtract — the generalization the reference's sum
+      QPU never shipped. Subscribers receive the contributions.
 
     Output column is ``<attr>_sum`` (sum.go:158-160). State maintenance is
     O(|delta| + |touched buckets|) per batch via ``_BucketedState``.
@@ -919,60 +929,48 @@ class SumView(_View):
         retain: int = 8,
         root: str | None = None,
     ):
+        if mode not in ("append", "cdc"):
+            raise ValueError(f"unknown mode {mode!r}")
         self.group_by = group_by
         self.agg_attr = agg_attr
         self.sum_col = f"{agg_attr}_sum"
         self.mode = mode
         self.derived = derived or {}
         self._derived_version: dict[str, int] = {}
-        # append mode: update-mode agg emits NEW totals -> latest row wins;
-        # cdc mode: raw contributions -> running sum (commutative)
-        merge = (
-            _ReplaceMerge()
-            if mode == "append"
-            else _AddMerge(sum_col=self.sum_col)
-        )
         super().__init__(
-            spark, stream, group_by, merge, name, n_buckets, retain, root
-        )
-
-    def _writer(self):
-        if self.mode == "cdc":
-            return super()._writer()
-        if self.mode != "append":
-            raise ValueError(f"unknown mode {self.mode!r}")
-        agg = self._stream.groupBy(self.group_by).agg(
-            F.sum(self.agg_attr).alias(self.sum_col)
-        )
-        return agg.writeStream.outputMode("update").foreachBatch(
-            self._on_batch
+            spark, stream, group_by, _AddMerge(sum_col=self.sum_col), name,
+            n_buckets, retain, root,
         )
 
     def _delta(self, batch: DataFrame) -> DataFrame:
-        """append: update-mode aggregation hands us the changed groups with
-        their NEW totals (the state store did the math) -> commit as is,
-        the replace merge keeps the newest row.
-
-        cdc: raw UPDATEDELTA rows -> per-group contribution -> add merge.
+        """Raw rows -> per-group contribution, for the add merge. cdc:
         DELETEs (new_value NULL, old_value set) contribute -old. An input
         ``_ts`` vector-clock column (see sources.cdc.attach_source_ts)
         carries through as the group's freshness: max over applied deltas
         (the reference folds per-record Vectorclocks the same way when it
         stamps state rows, qpu.proto:97-99)."""
-        if self.mode == "append":
-            return batch
-        aggs = [
-            F.sum(
-                F.coalesce(F.col("new_value"), F.lit(0.0))
-                - F.coalesce(F.col("old_value"), F.lit(0.0))
-            ).alias(self.sum_col)
-        ]
+        value = (
+            F.col(self.agg_attr)
+            if self.mode == "append"
+            else F.coalesce(F.col("new_value"), F.lit(0.0))
+            - F.coalesce(F.col("old_value"), F.lit(0.0))
+        )
+        aggs = [F.sum(value).alias(self.sum_col)]
         if "_ts" in batch.columns:
             aggs.append(F.max("_ts").alias("_ts"))
         return batch.groupBy(self.group_by).agg(*aggs)
 
+    def _published(self, delta: DataFrame) -> DataFrame:
+        """append: the snapshot memo (one collapse per version, shared with
+        readers and derived views) semi-joined to the batch's keys."""
+        if self.mode == "cdc":
+            return delta
+        return self.snapshot().join(
+            delta.select(self.group_by), self.group_by, "left_semi"
+        )
+
     # the foreachBatch entry point under the name of the input it takes
-    _on_changed_groups = _on_cdc_batch = _View._on_batch
+    _on_cdc_batch = _View._on_batch
 
     def _after_commit(self, prev_v: int, new_v: int) -> None:
         """Downstream QPUs: recompute derived views over the committed

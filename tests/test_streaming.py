@@ -890,6 +890,113 @@ def test_view_restart_resumes_and_converges(
 
 
 @pytest.mark.parametrize("crash", _CRASH_POINTS)
+def test_append_view_restart_resumes_and_converges(
+    spark, sf_dir, tmp_path, monkeypatch, crash
+):
+    """The restart contract for an append-mode sum view over raw rows.
+    The stream keeps no aggregation state, so each batch's contribution
+    is added to the LSM exactly once only because the epoch guard skips
+    the batch Spark re-delivers after the crash: double-counting it would
+    break convergence to the batch GROUP BY."""
+    from proteus_spark.registry import load as _load
+
+    root = str(tmp_path / "appendroot")
+    ev = _load(spark, sf_dir, "events").select("user_id", "value")
+    src = cdc.stage_stream(spark, ev, chunks=4, order_col="user_id")
+
+    def mk_view():
+        return SumView(
+            spark, src.subscribe(max_files_per_trigger=1), group_by="user_id",
+            agg_attr="value", name="t_append_restart", mode="append",
+            root=root,
+        )
+
+    v2, seen = _crash_and_recover(monkeypatch, crash, mk_view)
+    try:
+        v2.start().await_catch_up()
+        got = {
+            r["user_id"]: round(r["value_sum"], 4)
+            for r in v2.snapshot().collect()
+        }
+        exp = {
+            r["user_id"]: round(r["s"], 4)
+            for r in ev.groupBy("user_id")
+            .agg(F.sum("value").alias("s"))
+            .collect()
+        }
+        assert got == exp
+        _assert_every_epoch_seen(v2, seen)
+    finally:
+        v2.stop()
+        cdc.cleanup(src)
+
+
+def test_recover_refuses_root_of_another_merge_kind(spark, tmp_path):
+    """Rows mean what their merge says: a root committed under another
+    merge kind is refused, and so is a legacy root (no recorded kind)
+    under an additive merge — an old append-mode SumView root holds
+    running TOTALS, which the add merge would silently sum. A legacy root
+    of a non-additive view still recovers."""
+    import glob
+    import json
+
+    from proteus_spark.streaming.views import _BucketedState, _CoalesceMerge
+
+    rows = spark.createDataFrame([(1, 5.0)], "k bigint, new_value double")
+
+    def strip_merge_kind(root):
+        for path in glob.glob(f"{root}/manifest_v*.json"):
+            with open(path) as f:
+                raw = json.load(f)
+            del raw["merge"]
+            with open(path, "w") as f:
+                json.dump(raw, f)
+
+    def sum_view(root):
+        return SumView(
+            spark, stream=None, group_by="k", name="t_kind", root=root,
+        )
+
+    other = str(tmp_path / "coalesce")
+    st = _BucketedState(spark, other, key="k", merge=_CoalesceMerge({}), n_buckets=2)
+    st.commit_delta(rows.withColumn("_bucket", st.bucket_col()), epoch=0)
+    with pytest.raises(ValueError, match="merge"):
+        sum_view(other)
+
+    legacy = str(tmp_path / "legacy_sum")
+    sum_view(legacy)._on_batch(rows, 0)
+    assert sum_view(legacy).version() == 0  # recorded kind: recovers
+    strip_merge_kind(legacy)
+    with pytest.raises(ValueError, match="merge"):
+        sum_view(legacy)
+
+    strip_merge_kind(other)
+    fresh = _BucketedState(spark, other, key="k", merge=_CoalesceMerge({}))
+    assert fresh.recover() == 0
+
+
+def test_append_view_keeps_no_streaming_state(spark):
+    """One state per SumView: the append-mode stream runs no stateful
+    operator, so the LSM holds the only copy of the running totals."""
+    ev = spark.createDataFrame(
+        [(1, 1.0), (2, 2.0), (1, 3.0)], "user_id bigint, value double"
+    )
+    src = cdc.stage_stream(spark, ev, chunks=2)
+    view = SumView(
+        spark, src.subscribe(), group_by="user_id", agg_attr="value",
+        name="t_one_state", mode="append",
+    ).start()
+    try:
+        view.await_catch_up()
+        assert view._query.lastProgress["stateOperators"] == []
+        got = {r["user_id"]: r["value_sum"] for r in view.snapshot().collect()}
+        assert got == {1: 4.0, 2: 2.0}
+    finally:
+        view.stop()
+        cdc.cleanup(src)
+
+
+@pytest.mark.parametrize("crash", _CRASH_POINTS)
 def test_join_view_restart_resumes_and_converges(
     spark, sf_dir, tmp_path, monkeypatch, crash
 ):
@@ -2069,7 +2176,7 @@ def test_stop_latch_drops_late_foreachbatch(spark, sf_dir):
         .limit(8)
     )
 
-    # SumView: late _merge after stop() must not bump version or notify
+    # SumView: late _on_batch after stop() must not bump version or notify
     sv = SumView(
         spark, ev, group_by="user_id", agg_attr="value",
         name="t_latch_sum", mode="append",
@@ -2078,8 +2185,7 @@ def test_stop_latch_drops_late_foreachbatch(spark, sf_dir):
     sv.subscribe(lambda delta, epoch: seen.append(epoch))
     sv.stop(cleanup=False)  # never started: latch only
     v0 = sv.version()
-    late = ev.groupBy("user_id").agg(F.sum("value").alias("value_sum"))
-    sv._on_changed_groups(late, 0)  # the callback that lost the race
+    sv._on_batch(ev, 0)  # the callback that lost the race
     assert sv.version() == v0
     assert seen == []
     sv.stop()  # idempotent + cleanup
@@ -2475,6 +2581,39 @@ def test_merge_skips_snapshot_resolution_without_derived(spark, monkeypatch):
         assert calls["read"] == 1  # first reader resolves exactly once
         assert view.snapshot().count() == 1  # memoized per version
         assert calls["read"] == 1
+    finally:
+        view.stop()
+
+    # append mode: the same without subscribers; with one, each commit
+    # resolves the snapshot once to publish the touched groups' new
+    # totals, and a later reader reuses that resolution
+    raw = spark.createDataFrame([(1, 1.0)], "k bigint, value double")
+
+    def append_view(name):
+        return SumView(
+            spark, stream=None, group_by="k", agg_attr="value", name=name,
+            mode="append", n_buckets=2,
+        )
+
+    calls["read"] = 0
+    view = append_view("t_skip_snap_append")
+    try:
+        view._on_batch(raw, 0)
+        view._on_batch(raw, 1)
+        assert calls["read"] == 0
+    finally:
+        view.stop()
+    view = append_view("t_skip_snap_append_sub")
+    published: list[list] = []
+    view.subscribe(lambda d, e: published.append(sorted(map(tuple, d.collect()))))
+    try:
+        view._on_batch(raw, 0)
+        assert calls["read"] == 1
+        view._on_batch(raw, 1)
+        assert calls["read"] == 2  # exactly one per commit
+        assert published == [[(1, 1.0)], [(1, 2.0)]]  # new totals
+        assert view.snapshot().collect()[0]["value_sum"] == 2.0
+        assert calls["read"] == 2  # the reader reuses the commit's resolution
     finally:
         view.stop()
 
