@@ -66,15 +66,6 @@ class CacheStats:
     uncacheable: int = 0
     invalidations: int = 0
 
-    def as_dict(self) -> dict[str, int]:
-        return {
-            "hits": self.hits,
-            "misses": self.misses,
-            "evictions": self.evictions,
-            "uncacheable": self.uncacheable,
-            "invalidations": self.invalidations,
-        }
-
 
 @dataclass
 class _Entry:

@@ -314,7 +314,6 @@ def lsh_candidates(
     sig: DataFrame,
     bands: int = LSH_BANDS,
     rows: int = LSH_ROWS,
-    materialize: bool = False,
 ) -> DataFrame:
     """LSH banding: docs sharing any band bucket become (ida, idb)
     candidates. Equi-join on (band, band_value) — never all-pairs.
@@ -324,21 +323,17 @@ def lsh_candidates(
     signature pipeline (shingle explode + md5) — measured 2× the
     signature cost. The table is bands rows per DOC (not per shingle).
 
-    ``materialize=False`` (default): share it via ``.cache()`` and return
-    the candidate pairs LAZY — for callers that fold this plan into a
-    larger lazy pipeline. ``materialize=True`` (r16, guide §3.3/§5):
-    eager-localCheckpoint the band table, run the self-join into an
-    eager-checkpointed candidate frame, then RELEASE the band blocks
-    immediately — the returned frame is truncated (Scan ExistingRDD), the
-    signature subtree never re-embeds in consumers' analyzed plans, and
-    the band blocks live for exactly one job instead of until the next
-    clearCache/GC (same peak footprint as the cache, shorter hold).
-    Measured on minhash_lsh_dedup best-of-7 same-session at sf0.1:
-    1.196→1.111s best, 1.609→1.314 med."""
-    if materialize:
-        exploded = lsh_band_table(sig, bands, rows).localCheckpoint(eager=True)
-    else:
-        exploded = lsh_band_table(sig, bands, rows).cache()
+    The band table is eager-localCheckpointed, the self-join runs into an
+    eager-checkpointed candidate frame, and the band blocks are RELEASED
+    before return (r16, guide §3.3/§5): the returned frame is truncated
+    (Scan ExistingRDD), the signature subtree never re-embeds in
+    consumers' analyzed plans, and the band blocks live for exactly one
+    job. Measured on minhash_lsh_dedup best-of-7 same-session at sf0.1
+    against a ``.cache()``d band table: 1.196→1.111s best, 1.609→1.314
+    med."""
+    from proteus_spark.plans import ckpt
+
+    exploded = lsh_band_table(sig, bands, rows).localCheckpoint(eager=True)
     a = exploded.alias("a")
     b = exploded.alias("b")
     cand = (
@@ -350,12 +345,9 @@ def lsh_candidates(
         )
         .select(F.col("a.doc_id").alias("ida"), F.col("b.doc_id").alias("idb"))
         .distinct()
+        .localCheckpoint(eager=True)
     )
-    if materialize:
-        from proteus_spark.plans import ckpt
-
-        cand = cand.localCheckpoint(eager=True)
-        ckpt.release(exploded)
+    ckpt.release(exploded)
     return cand
 
 
@@ -377,7 +369,7 @@ def minhash_lsh_dedup(docs: DataFrame, min_jaccard: float = 0.8) -> DataFrame:
     corpus scan — |candidates| docs, not |corpus|).
     """
     # candidates feed two branches of the verification (doc restriction +
-    # pair filter). materialize=True eager-localCheckpoints — not
+    # pair filter). lsh_candidates eager-localCheckpoints — not
     # .cache()s — the small pair set: the minhash subtree runs once
     # either way, but the checkpoint also TRUNCATES it out of the
     # downstream plan (the cache form re-embeds the whole banding
@@ -391,9 +383,7 @@ def minhash_lsh_dedup(docs: DataFrame, min_jaccard: float = 0.8) -> DataFrame:
     # releasable here — the verification joins reference them); the
     # ContextCleaner frees them when the caller drops the result,
     # exactly as for .cache().
-    cand = lsh_candidates(
-        minhash_signatures(shingles(docs, distinct=False)), materialize=True
-    )
+    cand = lsh_candidates(minhash_signatures(shingles(docs, distinct=False)))
     cand_docs = (
         cand.select(F.col("ida").alias("doc_id"))
         .union(cand.select(F.col("idb").alias("doc_id")))

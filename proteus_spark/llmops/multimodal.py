@@ -7,15 +7,19 @@ internal/qpu_classes/datastore_driver/s3/store.go:146-200). Here the blob
 becomes a ``binary`` column with a metadata struct, and per-modality
 decode/feature-extraction runs as Arrow-batched ``mapInPandas`` — the
 Spark-side plumbing (schema, batch shape, partition parallelism) is real.
-Library-backed codecs (PIL/librosa/ffmpeg) are stubbed behind
-NotImplementedError because those libraries are not in this environment;
-three modalities run END TO END anyway because their formats need no
-library: the PPM (P6) image path (``ppm_assets``/``resize_ppm``,
-decode → pool → re-encode), the WAV (RIFF 8-bit PCM) audio path
-(``wav_assets``/``audio_features``, chunk-walk decode → windowed
-amplitude/energy/RMS), and the concatenated-P6 video path
-(``video_assets``/``video_frame_features``, frame-walk demux →
-keyframe-sampled channel means) — all oracle-checked byte-for-byte.
+Library-backed codecs (PIL/librosa/ffmpeg) are not in this environment;
+each decoder raises NotImplementedError where one would plug in:
+``extract_features`` on any non-text modality, and ``resize_ppm``,
+``audio_features``, ``video_frame_features`` and ``png_stats`` on a
+payload outside the one format each decodes. Four modalities run END TO
+END anyway because their formats need no library: the PPM (P6) image
+path (``ppm_assets``/``resize_ppm``, decode → pool → re-encode), the WAV
+(RIFF 8-bit PCM) audio path (``wav_assets``/``audio_features``,
+chunk-walk decode → windowed amplitude/energy/RMS), the concatenated-P6
+video path (``video_assets``/``video_frame_features``, frame-walk demux
+→ keyframe-sampled channel means) and the PNG path
+(``png_assets``/``png_stats``, zlib inflate → scanline unfilter →
+channel sums) — all oracle-checked byte-for-byte.
 """
 
 from __future__ import annotations
@@ -87,61 +91,7 @@ def extract_features(assets: DataFrame) -> DataFrame:
     return assets.mapInPandas(_extract_batch, schema=EXTRACT_SCHEMA)
 
 
-RESIZE_SCHEMA = "doc_id long, modality string, width int, height int, thumb binary"
 FRAMES_SCHEMA = "doc_id long, frame_idx long, n_bytes long, head string"
-
-
-def resize_assets(assets: DataFrame, side: int = 4) -> DataFrame:
-    """Thumbnail pass: decode -> downsample -> re-encode, Arrow-batched.
-
-    Real image decode (PIL/cv2) is not in this environment, so the decode
-    step is a DETERMINISTIC FAKE for modality 'fake_image' (payload bytes
-    = a square grayscale image, side = floor(sqrt(len))), average-pooled
-    to ``side`` x ``side``; any real image modality raises
-    NotImplementedError where the codec would plug in. The Spark-side
-    contract — binary in, fixed-shape binary out, one pass per partition,
-    no driver involvement — is exactly what a real resizer runs under.
-    """
-
-    def _resize_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
-
-        import numpy as _np
-        import pandas as _pd
-
-        def _one(payload: bytes, modality: str) -> bytes:
-            if modality != "fake_image":
-                raise NotImplementedError(
-                    f"image codec for modality {modality!r} is stubbed"
-                )
-            n = int(math.isqrt(len(payload)))
-            img = _np.frombuffer(bytes(payload[: n * n]), dtype=_np.uint8)
-            img = img.reshape(n, n)
-            # average-pool to side x side (nearest-block)
-            ys = (_np.arange(side) * n) // side
-            xs = (_np.arange(side) * n) // side
-            ye = _np.append(ys[1:], n)
-            xe = _np.append(xs[1:], n)
-            out = _np.empty((side, side), dtype=_np.uint8)
-            for i in range(side):
-                for j in range(side):
-                    out[i, j] = int(img[ys[i]:ye[i], xs[j]:xe[j]].mean())
-            return out.tobytes()
-
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "modality": pdf["modality"],
-                    "width": side,
-                    "height": side,
-                    "thumb": [
-                        _one(p, m) for p, m in zip(pdf["payload"], pdf["modality"])
-                    ],
-                }
-            )
-
-    return assets.mapInPandas(_resize_batch, schema=RESIZE_SCHEMA)
 
 
 PPM_SIDE = 8  # synthesized asset: 8x8 RGB
@@ -513,29 +463,6 @@ def video_frame_features(assets: DataFrame, every_n: int = VID_EVERY) -> DataFra
 # exercises an actual entropy-coded image format end-to-end. Rows cycle
 # through ALL FIVE filter types at encode time, so the oracle-checked
 # query proves every unfilter branch, not just the trivial one.
-PNG_BPP = 3  # 8-bit RGB
-
-
-def _png_dims(doc_id: int) -> tuple[int, int]:
-    return 16 + doc_id % 9, 12 + doc_id % 7
-
-
-def _png_pixel(doc_id: int, c: int, x: int, y: int) -> int:
-    # closed-form pattern => the SQL oracle recomputes channel sums
-    # without touching bytes (an INDEPENDENT check of the whole codec)
-    return (doc_id + 2 * c + 3 * x + 5 * y) % 256
-
-
-def _paeth(a: int, b: int, c: int) -> int:
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    if pb <= pc:
-        return b
-    return c
-
-
 def png_assets(docs: DataFrame) -> DataFrame:
     """Synthesize real PNGs (one per doc, dims and pixels derived from
     doc_id) via Arrow-batched mapInPandas. Row y uses filter type y % 5 —

@@ -1462,29 +1462,6 @@ def llm_embed_norms(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-# llm_multimodal_extract RETIRED (round-12 audit; the r11 agg_approx_distinct
-# precedent — verification moved WITH the retirement): its surface was
-# (modality='text' literal, n_bytes=octet_length, magic=substr(text,1,4))
-# over to_binary_assets. Every piece is pinned elsewhere: the SAME
-# to_binary_assets wrap feeds llm_multimodal_frames, whose frame-0 `head`
-# IS the magic for EVERY doc (frame 0 always emits) and whose byte
-# arithmetic hashes the payload-length relation; document byte lengths are
-# independently hashed by llm_corpus_stats min/max/avg; the 1:1 Arrow-batched
-# mapInPandas extractor shape is driver-hashed five times over (resize_ppm,
-# audio_features, png_stats, video_frame_features — llm_multimodal_{ppm,wav,
-# png,video}). extract_features itself keeps DIRECT value-level coverage via
-# tests/test_fidelity.py::test_multimodal_extract_values_and_stub_seam
-# (added with the retirement: exact n_bytes/magic values + the
-# NotImplementedError stub seam for non-text modalities).
-def llm_multimodal_extract(spark, sf_dir):
-    """Binary-payload pipeline: documents wrapped as (payload binary, meta
-    struct) assets, then Arrow-batched mapInPandas feature extraction —
-    real multimodal plumbing with the codec stubbed (SURVEY §7.1).
-    Unregistered since the round-12 audit (covered composition — see above)."""
-    assets = M.to_binary_assets(load(spark, sf_dir, "documents"))
-    return M.extract_features(assets)
-
-
 @register(
     "llm_multimodal_frames",
     oracle="""

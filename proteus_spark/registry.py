@@ -109,10 +109,6 @@ def _scan_shape(path: str) -> tuple[int, int]:
     return _split_cache[path]
 
 
-def _unsplittable_rows(path: str) -> int:
-    return _scan_shape(path)[0]
-
-
 _lead_distinct_cache: dict[str, int] = {}
 
 

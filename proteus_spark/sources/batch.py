@@ -145,62 +145,3 @@ def parquet_source(spark: SparkSession, path: str, schema=None) -> DataFrame:
         if declared != actual:
             raise ValueError(f"schema drift at {path}: {declared} != {actual}")
     return df
-
-
-def corpus_source(
-    spark: SparkSession,
-    path: str,
-    fmt: str = "jsonl",
-    schema=None,
-    compression: str | None = None,
-) -> DataFrame:
-    """Document-corpus reader: JSONL / CSV / parquet with an EXPLICIT
-    schema — the ingest mouth of a training-data pipeline.
-
-    Scale notes baked in:
-
-    - an explicit schema is mandatory for jsonl/csv (schema inference
-      re-reads the whole input once before the real scan — at 100 TB that
-      doubles ingest IO; the reference's declare-don't-infer discipline,
-      config.go:25-35, is also simply correct here);
-    - ``.gz`` corpora are UNSPLITTABLE: one task per file no matter the
-      size. The standard mitigation is many medium files; downstream
-      operators that do per-row work (shingling, hashing) already
-      repartition to cluster parallelism first (see llmops.dedup.shingles),
-      which is exactly the densify pattern for this shape;
-    - jsonl parsing is JVM-side (Jackson) and columns prune: a query
-      touching only ``text`` never materializes the other fields.
-    """
-    fmt = fmt.lower()
-    if fmt in ("jsonl", "json"):
-        if schema is None:
-            raise ValueError("jsonl corpus requires an explicit schema")
-        reader = spark.read.schema(schema)
-        if compression:
-            reader = reader.option("compression", compression)
-        return reader.json(path)
-    if fmt == "csv":
-        if schema is None:
-            raise ValueError("csv corpus requires an explicit schema")
-        reader = spark.read.schema(schema).option("header", "true")
-        if compression:
-            reader = reader.option("compression", compression)
-        return reader.csv(path)
-    if fmt == "parquet":
-        return parquet_source(spark, path, schema)
-    if fmt == "orc":
-        # columnar like parquet: self-describing (schema optional, used
-        # as a projection/validation contract when given), splittable,
-        # predicate pushdown + column pruning via the native ORC reader
-        df = spark.read.orc(path)
-        if schema is not None:
-            from pyspark.sql.types import StructType
-
-            st = (
-                StructType.fromDDL(schema)
-                if isinstance(schema, str)
-                else schema
-            )
-            df = df.select(*[f.name for f in st.fields])
-        return df
-    raise ValueError(f"unsupported corpus format: {fmt!r}")

@@ -48,13 +48,12 @@ Scale notes: segments are one file per partition laid down by a
 DISTRIBUTED Spark write (the parallel producer); offsets are line indices.
 Offset discovery is served by a PRODUCER-WRITTEN count index (round 11 —
 closing the residual flagged since r5): stage_topic writes
-``_base-counts.json``, every append_epoch commit marker carries its
-epoch's per-segment counts, and a Follower persists counts it already
-received in fetch headers (``_replica-counts.json``) — so
-``latestOffset`` / broker ``ends`` / group ``poll`` skip-seek are
-metadata reads, O(#files) per trigger. Segments produced by a foreign
-writer (no index entry) fall back to a (size, mtime)-memoized line scan;
-the index is an optimization, never a correctness dependency.
+``_base-counts.json`` and every append_epoch commit marker carries its
+epoch's per-segment counts — so ``latestOffset`` / broker ``ends`` /
+group ``poll`` skip-seek are metadata reads, O(#files) per trigger.
+Segments produced by a foreign writer (no index entry) fall back to a
+(size, mtime)-memoized line scan; the index is an optimization, never a
+correctness dependency.
 """
 
 from __future__ import annotations
@@ -177,7 +176,7 @@ _sidecar_cache: dict = {}
 # oldest-visit-first once the total exceeds it.
 _SIDECAR_CACHE_MAX = 512
 # One lock for EVERY cache the function touches (module-level or a
-# Broker/Follower instance's): the eviction sweep and the LRU pop
+# Broker instance's): the eviction sweep and the LRU pop
 # ITERATE the dict, and broker handler threads call this concurrently
 # per connection — unguarded, an insert during the sweep raises
 # RuntimeError('dictionary changed size during iteration') and fails the
@@ -198,9 +197,7 @@ def _producer_counts(path: str, cache: dict | None = None) -> dict[str, int]:
     - ``_base-counts.json`` — written by stage_topic at bulk load;
     - each ``_epoch-NNNNNNNN.committed`` marker — append_epoch records
       its epoch's per-segment counts INSIDE the existing atomic commit
-      point (legacy plain-text markers parse to no counts and fall back);
-    - ``_replica-counts.json`` — a Follower records each replicated
-      segment's count from the fetch header it already received.
+      point (legacy plain-text markers parse to no counts and fall back).
 
     A segment absent from every source (legacy layout, foreign writer)
     falls back to the caller's own counting cache — the index is an
@@ -217,7 +214,7 @@ def _producer_counts(path: str, cache: dict | None = None) -> dict[str, int]:
         prev = dict(cache.get(topic) or {})
     fresh: dict = {}
     for f in sorted(names):
-        if f in ("_base-counts.json", "_replica-counts.json") or (
+        if f == "_base-counts.json" or (
             f.startswith("_epoch-") and f.endswith(".committed")
         ):
             fp = os.path.join(path, f)
@@ -227,9 +224,9 @@ def _producer_counts(path: str, cache: dict | None = None) -> dict[str, int]:
             except OSError:
                 continue
             # keyed by PATH with the stat alongside: a rewritten source
-            # (the Follower rewrites _replica-counts.json every cycle)
-            # REPLACES its entry instead of accreting one per rewrite —
-            # the superseded-key eviction _IndexCache documents
+            # (stage_topic overwriting _base-counts.json) REPLACES its
+            # entry instead of accreting one per rewrite — the
+            # superseded-key eviction _IndexCache documents
             cached = prev.get(fp)
             if cached is None or cached[0] != stat_key:
                 counts: dict[str, int] = {}
@@ -393,23 +390,6 @@ def _read_range_raw(
             n_out += hi - lo
         off += n
     return b"".join(out), n_out
-
-
-def _read_range(
-    topic: str, p: int, start: int, end: int, count_cache: dict
-) -> list[tuple[str, str, int]]:
-    """Decoded [(key, value, offset)] for a local range read (tests,
-    tooling); the broker path ships the raw form instead."""
-    import json as _json
-
-    blob, _n = _read_range_raw(topic, p, start, end, count_cache)
-    out = []
-    off = start
-    for line in blob.splitlines():
-        rec = _json.loads(line)
-        out.append((rec.get("key"), rec.get("value"), off))
-        off += 1
-    return out
 
 
 class Broker:
@@ -583,228 +563,6 @@ class Broker:
             self._thread.join(timeout=2)
 
     def __enter__(self) -> "Broker":
-        return self.start()
-
-    def __exit__(self, *exc) -> None:
-        self.stop()
-
-
-class Follower:
-    """Follower replication + failover for a topic served by a leader
-    ``Broker`` — beyond-reference hardening (the round-7 verdict named
-    the broker's single-leader, no-replication design as the remaining
-    transport gap; the reference's own side-channel is equally
-    single-path, mysql/store.go:117-151). Kafka-shaped by construction:
-
-    - the follower FETCHES over the same framed wire protocol consumers
-      use (replication IS a consumer that writes what it reads — one
-      pooled connection, raw byte blobs, never parsed broker-side or
-      follower-side);
-    - the leader serves only read-committed records, so the replica
-      always holds exactly a committed PREFIX of each partition — the
-      high-watermark contract falls out of the existing commit gating;
-    - appended replica segments land via write-to-temp + atomic rename,
-      so a broker promoted mid-append can never serve half a segment;
-    - per-partition replicated offsets are recovered from the replica
-      dir itself on restart (offsets are per-partition line indices —
-      stable across leader and replica by construction).
-
-    Failover: on leader loss, ``promote()`` returns a fresh ``Broker``
-    over the replica dir; consumers re-plan offsets against it and fetch
-    the identical committed prefix. A consumer whose planned range
-    outruns what replicated before the leader died gets the existing
-    loud ``offset out of range`` error — exactly the truncation contract
-    the single-broker path already enforces — instead of silently
-    re-reading shifted records. A replica that finds itself AHEAD of its
-    leader (unclean leader restart that lost committed data) refuses to
-    continue rather than serving a forked history."""
-
-    def __init__(
-        self,
-        host: str,
-        port: int,
-        replica_dir: str,
-        partitions: int = 0,
-        poll_interval: float = 0.1,
-    ):
-        import threading
-
-        self.host, self.port = host, int(port)
-        self.dir = replica_dir
-        self.partitions = int(partitions)
-        self.poll_interval = poll_interval
-        os.makedirs(replica_dir, exist_ok=True)
-        # restart-safe resume: the replica dir is the source of truth for
-        # both the replicated offsets and the next segment sequence number
-        width = max(self.partitions, _discover_partitions(replica_dir))
-        self.replicated: dict[int, int] = dict(
-            end_offsets(replica_dir, width)
-        )
-        self._seq: dict[int, int] = {
-            p: len(_segment_files(replica_dir, p)) for p in range(width)
-        }
-        # replica-side offset index: each replicated segment's count is
-        # KNOWN from the fetch header — persist it so this replica's own
-        # consumers (and a restart's end_offsets above) never line-scan
-        self._counts: dict[str, int] = dict(_producer_counts(replica_dir))
-        self.error: Exception | None = None
-        self._stop = threading.Event()
-        self._thread: "threading.Thread | None" = None
-
-    def poll_once(self) -> int:
-        """One replication pass: discover leader ends, fetch every
-        partition's missing suffix as raw bytes, append atomically.
-        Returns the number of records replicated this pass (0 = caught
-        up at the discovery instant)."""
-        resp = broker_request(
-            self.host, self.port, {"op": "ends", "partitions": self.partitions}
-        )
-        if "error" in resp:
-            raise RuntimeError(f"replication ends failed: {resp['error']}")
-        moved = 0
-        for ps in sorted(resp["ends"], key=int):
-            p, end = int(ps), int(resp["ends"][ps])
-            cur = self.replicated.get(p, 0)
-            if end < cur:
-                raise RuntimeError(
-                    f"replica ahead of leader on partition {p} "
-                    f"({cur} > {end}): unclean leader restart lost "
-                    "committed records — refusing to fork history; "
-                    "rebuild this replica"
-                )
-            if end == cur:
-                continue
-            header, blob = _pooled_exchange(
-                (self.host, self.port),
-                {"op": "fetch", "partition": p, "start": cur, "end": end},
-            )
-            if "error" in header:
-                raise RuntimeError(
-                    f"replication fetch failed: {header['error']}"
-                )
-            d = os.path.join(self.dir, f"p={p}")
-            os.makedirs(d, exist_ok=True)
-            seq = self._seq.get(p, 0)
-            final = os.path.join(d, f"part-{seq:08d}-replica")
-            tmp = os.path.join(d, f".part-{seq:08d}-replica.tmp")
-            with open(tmp, "wb") as fh:
-                fh.write(blob)
-            os.replace(tmp, final)
-            self._counts[f"p={p}/{os.path.basename(final)}"] = int(
-                header.get("n", end - cur)
-            )
-            self._seq[p] = seq + 1
-            self.replicated[p] = end
-            moved += end - cur
-        if moved:
-            ctmp = os.path.join(self.dir, "._replica-counts.json.tmp")
-            with open(ctmp, "w") as fh:
-                json.dump({"counts": self._counts}, fh)
-            os.replace(ctmp, os.path.join(self.dir, "_replica-counts.json"))
-        return moved
-
-    def lag(self) -> dict[int, int]:
-        """Per-partition replication lag: the leader's committed end
-        minus this replica's replicated offset — the alert signal a
-        deployment watches so failover never silently loses the tail
-        (VERDICT r8 #7; promote() of a lagging replica surfaces to
-        consumers as offset-out-of-range, but by then the records are
-        gone). 0 = caught up at the discovery instant; NEGATIVE lag
-        means the replica is AHEAD of the leader — the fork condition
-        poll_once refuses on, reported here as-is so monitoring sees it
-        too. Raises if the leader is unreachable (an unreachable leader
-        has no well-defined lag; callers alerting on lag treat the
-        exception itself as the page)."""
-        resp = broker_request(
-            self.host,
-            self.port,
-            {"op": "ends", "partitions": self.partitions},
-        )
-        if "error" in resp:
-            raise RuntimeError(f"lag discovery failed: {resp['error']}")
-        width = max(
-            (int(p) + 1 for p in resp["ends"]),
-            default=self.partitions,
-        )
-        out = {
-            int(p): int(e) - self.replicated.get(int(p), 0)
-            for p, e in resp["ends"].items()
-        }
-        # partitions the replica knows but the leader response omitted
-        for p, off in self.replicated.items():
-            if p not in out and p < max(width, self.partitions):
-                out[p] = -off
-        return out
-
-    def catch_up(self, timeout: float = 30.0) -> "Follower":
-        """Replicate until a pass finds nothing new (the replica matches
-        the leader's committed ends as of that discovery)."""
-        import time as _time
-
-        t0 = _time.monotonic()
-        while self.poll_once() > 0:
-            if _time.monotonic() - t0 > timeout:
-                raise TimeoutError(
-                    f"replica failed to catch up within {timeout}s"
-                )
-        return self
-
-    # -- background tailing -------------------------------------------------
-    def start(self) -> "Follower":
-        import threading
-
-        def _loop():
-            while not self._stop.is_set():
-                try:
-                    self.poll_once()
-                except Exception as exc:  # leader gone / truncated: stop
-                    self.error = exc      # tailing, surface on promote()
-                    return
-                self._stop.wait(self.poll_interval)
-
-        self._thread = threading.Thread(target=_loop, daemon=True)
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
-
-    def promote(self, force: bool = False) -> Broker:
-        """Stop following and expose the replica as a servable topic —
-        the failover path. Returns an UNSTARTED ``Broker`` bound to the
-        replica dir (caller starts it / uses it as a context manager).
-
-        Pending background-tail errors are CLASSIFIED, not swallowed
-        (VERDICT r8 #7 — the old behavior cleared everything but
-        fork-refusal, so a disk-full mid-append or a protocol error
-        would silently promote a replica whose tail state is unknown):
-
-        - leader-unreachable (OSError family: refused/reset/timeout) is
-          the EXPECTED failover trigger — cleared, promotion proceeds;
-        - anything else (fork-refusal, fetch protocol errors, local
-          write failures) REFUSES promotion and re-raises the original
-          error, because the replica's state was not left by a clean
-          leader-death — ``force=True`` overrides after operator
-          inspection (fork-refusal is never overridable: a forked
-          history served is permanently divergent)."""
-        self.stop()
-        err = self.error
-        if err is not None:
-            if "refusing to fork" in str(err):
-                raise err
-            if not isinstance(err, OSError) and not force:
-                raise RuntimeError(
-                    "refusing to promote: the replication tail died on a "
-                    f"non-leader-loss error ({type(err).__name__}: {err}); "
-                    "inspect the replica, then promote(force=True) to "
-                    "override"
-                ) from err
-        return Broker(self.dir)
-
-    def __enter__(self) -> "Follower":
         return self.start()
 
     def __exit__(self, *exc) -> None:
@@ -1029,7 +787,7 @@ def register_log_datasource(spark: SparkSession) -> str:
             return out
         fresh: dict = {}
         for f in sorted(names):
-            if f in ("_base-counts.json", "_replica-counts.json") or (
+            if f == "_base-counts.json" or (
                 f.startswith("_epoch-") and f.endswith(".committed")
             ):
                 fp = os.path.join(path, f)
@@ -1160,7 +918,7 @@ def register_log_datasource(spark: SparkSession) -> str:
             if side_cache is None:
                 side_cache = self._sidecar_cache = {}
             # producer-written counts first (base-load sidecar + epoch
-            # markers + replica sidecar): offset discovery is then pure
+            # markers): offset discovery is then pure
             # metadata; only unindexed segments fall back to the
             # (size, mtime)-memoized line scan below
             side = _closure_producer_counts(self.path, side_cache)

@@ -108,27 +108,13 @@ def test_salted_sum_matches_plain(spark, sf_dir):
     assert plain == salted
 
 
-def test_multimodal_resize_fake_image(spark):
-    payload = bytes(range(256))  # 16x16 grayscale ramp
-    assets = spark.createDataFrame(
-        [(1, payload, "fake_image")], "doc_id long, payload binary, modality string"
-    )
-    rows = M.resize_assets(assets, side=4).collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r["width"], r["height"]) == (4, 4)
-    thumb = bytes(r["thumb"])
-    assert len(thumb) == 16
-    # average-pooling a monotone ramp stays monotone along each row
-    assert list(thumb[:4]) == sorted(thumb[:4])
-
-
 def test_multimodal_extract_values_and_stub_seam(spark):
     """Value-level pin for extract_features, moved here WITH the round-12
-    retirement of the llm_multimodal_extract registry query (covered
-    composition — see queries/llm.py): exact 1:1 row shape, n_bytes =
-    payload byte length, magic = first 4 bytes decoded, and the
-    NotImplementedError stub seam for non-text modalities."""
+    retirement of the llm_multimodal_extract registry query (a covered
+    composition): exact 1:1 row shape, n_bytes = payload byte length,
+    magic = first 4 bytes decoded, and the NotImplementedError stub seams
+    of extract_features (non-text modalities) and resize_ppm (non-P6
+    payloads)."""
     assets = spark.createDataFrame(
         [
             (1, "hello world".encode(), "text"),
@@ -152,16 +138,10 @@ def test_multimodal_extract_values_and_stub_seam(spark):
     )
     with _pytest.raises(Exception, match="NotImplementedError|stubbed"):
         M.extract_features(stub).collect()
-
-
-def test_multimodal_resize_real_codec_stubbed(spark):
-    assets = spark.createDataFrame(
-        [(1, b"\x89PNG1234", "image")], "doc_id long, payload binary, modality string"
-    )
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match="NotImplementedError|stubbed"):
-        M.resize_assets(assets).collect()
+    # the resize path's seam: a payload that is not a P6 image raises
+    # where a real codec would plug in
+    with _pytest.raises(Exception, match="NotImplementedError|only P6"):
+        M.resize_ppm(stub).collect()
 
 
 def test_engine_query_subscribe(spark, sf_dir):

@@ -1231,7 +1231,7 @@ def test_pq_train_releases_checkpoint_blocks(spark, sf_dir):
 
 
 def test_lsh_candidates_materialize_releases_band_blocks(spark, sf_dir):
-    """Optimization r16 — lsh_candidates(materialize=True) eager-
+    """Optimization r16 — lsh_candidates eager-
     checkpoints the exploded band table for the self-join and must
     release its blocks before returning: only the candidate-pair
     checkpoint may survive (it backs the returned frame). Pin: exactly
@@ -1251,9 +1251,7 @@ def test_lsh_candidates_materialize_releases_band_blocks(spark, sf_dir):
         return {int(k) for k in jmap.keySet().toArray()}
 
     before = persisted_ids()
-    cand = lsh_candidates(
-        minhash_signatures(shingles(docs, distinct=False)), materialize=True
-    )
+    cand = lsh_candidates(minhash_signatures(shingles(docs, distinct=False)))
     new = persisted_ids() - before
     assert len(new) == 1, (
         f"expected exactly the candidate checkpoint to survive, got "
@@ -1262,7 +1260,7 @@ def test_lsh_candidates_materialize_releases_band_blocks(spark, sf_dir):
     assert (
         cand._jdf.queryExecution().analyzed().getClass().getSimpleName()
         == "LogicalRDD"
-    ), "materialize=True must return a checkpoint-backed frame"
+    ), "lsh_candidates must return a checkpoint-backed frame"
 
 
 def test_parsed_expression_builders_match_column_op_forms(spark, sf_dir):

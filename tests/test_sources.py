@@ -92,39 +92,6 @@ def test_parquet_source_schema_contract(spark, sf_dir):
         )
 
 
-def test_corpus_source_jsonl_roundtrip(spark, sf_dir, tmp_path):
-    """JSONL corpus ingest: explicit schema, no inference pass, columns
-    prune to the fields a query touches."""
-    import json as _json
-
-    from proteus_spark.sources.batch import corpus_source
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(50).collect()
-    path = tmp_path / "corpus.jsonl"
-    with open(path, "w") as f:
-        for r in docs:
-            f.write(_json.dumps({"doc_id": r["doc_id"], "text": r["text"],
-                                 "lang": r["lang"]}) + "\n")
-    df = corpus_source(
-        spark, str(path), fmt="jsonl",
-        schema="doc_id long, text string, lang string",
-    )
-    assert df.count() == 50
-    got = {r["doc_id"]: r["text"] for r in df.collect()}
-    assert got == {r["doc_id"]: r["text"] for r in docs}
-    # explicit schema -> no inference job; projection prunes to one field
-    assert df.select("text").schema.fieldNames() == ["text"]
-
-
-def test_corpus_source_requires_schema(spark, tmp_path):
-    import pytest as _pytest
-
-    from proteus_spark.sources.batch import corpus_source
-
-    with _pytest.raises(ValueError, match="explicit schema"):
-        corpus_source(spark, str(tmp_path), fmt="jsonl")
-
-
 def test_debezium_parse_envelope_ops(spark):
     """Envelope -> canonical delta mapping: c/r -> STATE, u -> UPDATEDELTA
     (old+new images), d -> DELETE tombstone; ts_ms -> _ts micros; key
@@ -1345,6 +1312,19 @@ def test_broker_protocol_and_network_stream(spark, tmp_path):
         assert len(rows) == n_first
         assert sorted(rows) == sorted(str(i) for i in range(60))
 
+    # the topic grows while no broker runs; the SAME checkpoint resumes
+    # against a new broker on another port (``consume`` reads ``b`` when
+    # called) and receives exactly the new records: offsets are line
+    # indices of the store, not of a broker instance
+    more = spark.range(60, 70).select(
+        F.col("id").cast("string").alias("key"),
+        F.col("id").cast("string").alias("value"),
+    )
+    assert minilog.append_epoch(more, topic, epoch=1, partitions=3)
+    with minilog.Broker(topic) as b:
+        consume(7)
+    assert sorted(rows) == sorted(str(i) for i in range(70))
+
 
 def test_broker_index_cache_locked_bounded_and_evicts_stale_keys(tmp_path):
     """The broker's per-segment byte-offset index cache (ADVICE r7): (a)
@@ -1470,6 +1450,25 @@ def test_broker_truncated_log_fails_fetch_loudly(spark, tmp_path):
         with _pytest.raises(RuntimeError, match="offset out of range"):
             minilog.broker_fetch(b.host, b.port, 0, 0, n0)
 
+    # a two-segment store plus an epoch segment whose commit marker was
+    # never written: the broker serves exactly the committed prefix,
+    # across the segment boundary, and a range past its end fails the
+    # same loud way
+    hand = str(tmp_path / "hand")
+    _hand_topic(hand, {0: 5, 1: 3})
+    _hand_topic(hand, {0: 2}, start=5)
+    with open(os.path.join(hand, "p=0", "part-e00000001-x"), "w") as fh:
+        fh.write('{"key": "k", "value": "uncommitted"}\n')
+    with minilog.Broker(hand) as b:
+        got = minilog.broker_request(
+            b.host, b.port, {"op": "ends", "partitions": 2}
+        )
+        assert {int(k): v for k, v in got["ends"].items()} == {0: 7, 1: 3}
+        recs = minilog.broker_fetch(b.host, b.port, 0, 0, 7)
+        assert [v for _, v, _ in recs] == [f"v0-{i}" for i in range(7)]
+        with _pytest.raises(RuntimeError, match="offset out of range"):
+            minilog.broker_fetch(b.host, b.port, 0, 6, 10)
+
 
 def test_filesystem_reader_truncated_store_fails_loudly(spark, tmp_path):
     """The filesystem transport honors the same OFFSET_OUT_OF_RANGE
@@ -1534,242 +1533,6 @@ def _hand_topic(root, counts: dict[int, int], start: int = 0):
                 )
 
 
-def test_follower_replicates_incrementally_and_promotes(tmp_path):
-    """Broker replication (beyond-reference hardening): a Follower
-    replicates a leader's committed records over the same framed wire
-    protocol consumers use, tails new segments INCREMENTALLY (no
-    re-fetch of already-replicated offsets), survives its own restart by
-    recovering offsets from the replica dir, and after leader loss
-    promotes to a Broker serving the identical committed prefix."""
-    from proteus_spark.sources import minilog
-
-    topic = str(tmp_path / "topic")
-    _hand_topic(topic, {0: 5, 1: 3})
-    rep = str(tmp_path / "replica")
-    with minilog.Broker(topic) as leader:
-        f = minilog.Follower(leader.host, leader.port, rep, partitions=2)
-        f.catch_up()
-        assert minilog.end_offsets(rep, 2) == {0: 5, 1: 3}
-        assert minilog._read_range(rep, 0, 0, 5, {}) == minilog._read_range(
-            topic, 0, 0, 5, {}
-        )
-        # leader grows: the next pass replicates ONLY the delta (one new
-        # replica segment per touched partition, offsets advance)
-        _hand_topic(topic, {0: 2}, start=5)
-        assert f.poll_once() == 2
-        assert f.replicated[0] == 7
-        assert len(minilog._segment_files(rep, 0)) == 2
-        # restart-resume: a fresh Follower over the same dir recovers the
-        # replicated offsets from disk and finds nothing new
-        f2 = minilog.Follower(leader.host, leader.port, rep, partitions=2)
-        assert f2.replicated == {0: 7, 1: 3}
-        assert f2.poll_once() == 0
-    # leader dead: promote the replica and serve the identical prefix
-    with f.promote() as promoted:
-        got = minilog.broker_request(
-            promoted.host, promoted.port, {"op": "ends", "partitions": 2}
-        )
-        assert {int(k): v for k, v in got["ends"].items()} == {0: 7, 1: 3}
-        recs = minilog.broker_fetch(promoted.host, promoted.port, 0, 0, 7)
-        assert [v for _, v, _ in recs] == [
-            f"v0-{i}" for i in range(7)
-        ]
-
-
-def test_follower_failover_lag_surfaces_as_offset_out_of_range(tmp_path):
-    """A replica that lagged the leader at failover serves only its
-    committed prefix: a consumer whose planned range outruns the replica
-    gets the loud offset-out-of-range error (the truncation contract),
-    never silently shifted records. The background tail records the
-    leader-loss error without killing promotion."""
-    import time
-
-    import pytest as _pytest
-
-    from proteus_spark.sources import minilog
-
-    topic = str(tmp_path / "topic")
-    _hand_topic(topic, {0: 6})
-    rep = str(tmp_path / "replica")
-    leader = minilog.Broker(topic).start()
-    try:
-        f = minilog.Follower(
-            leader.host, leader.port, rep, partitions=1, poll_interval=0.05
-        ).start()
-        t0 = time.monotonic()
-        while f.replicated.get(0, 0) < 6 and time.monotonic() - t0 < 10:
-            time.sleep(0.02)
-        assert f.replicated.get(0, 0) == 6
-        f.stop()  # follower pauses; leader keeps accepting records
-        _hand_topic(topic, {0: 4}, start=6)
-    finally:
-        leader.stop()  # leader dies with the replica 4 records behind
-    with f.promote() as promoted:
-        assert minilog.broker_fetch(promoted.host, promoted.port, 0, 0, 6)
-        with _pytest.raises(RuntimeError, match="offset out of range"):
-            minilog.broker_fetch(promoted.host, promoted.port, 0, 6, 10)
-
-
-def test_follower_lag_reporting_and_promote_error_classes(tmp_path):
-    """Follower observability (socket-level): (a) ``lag()`` reports the
-    per-partition leader-end minus replicated-offset signal a deployment
-    alerts on BEFORE failover loses the tail — caught-up 0, behind by
-    the exact delta after the leader grows, 0 again after catch_up, and
-    raising once the leader is unreachable (no well-defined lag); (b)
-    promote() CLASSIFIES pending background-tail errors instead of
-    swallowing them: a non-leader-loss error (protocol/disk) refuses
-    promotion and chains the original, force=True overrides, while the
-    OSError family (the expected leader-death trigger) still promotes
-    cleanly."""
-    import pytest as _pytest
-
-    from proteus_spark.sources import minilog
-
-    topic = str(tmp_path / "topic")
-    _hand_topic(topic, {0: 5, 1: 3})
-    rep = str(tmp_path / "replica")
-    leader = minilog.Broker(topic).start()
-    try:
-        f = minilog.Follower(leader.host, leader.port, rep, partitions=2)
-        f.catch_up()
-        assert f.lag() == {0: 0, 1: 0}
-        _hand_topic(topic, {0: 4, 1: 1}, start=5)
-        assert f.lag() == {0: 4, 1: 1}  # behind by exactly the delta
-        f.catch_up()
-        assert f.lag() == {0: 0, 1: 0}
-        # (b) a pending NON-leader-loss error refuses promotion, chains
-        # the original, and force=True overrides after inspection
-        f.error = RuntimeError("replication fetch failed: boom")
-        with _pytest.raises(RuntimeError, match="refusing to promote") as ei:
-            f.promote()
-        assert isinstance(ei.value.__cause__, RuntimeError)
-        assert "boom" in str(ei.value.__cause__)
-        forced = f.promote(force=True)
-        assert isinstance(forced, minilog.Broker)
-        # the expected leader-loss class (OSError) promotes cleanly
-        f.error = ConnectionRefusedError("leader gone")
-        assert isinstance(f.promote(), minilog.Broker)
-        f.error = None
-    finally:
-        leader.stop()
-    # leader unreachable: lag is undefined -> the call itself raises
-    with _pytest.raises(Exception):
-        f.lag()
-
-
-def test_follower_refuses_forked_history(tmp_path):
-    """An unclean leader restart that LOST committed records must not be
-    replicated over: a replica that finds itself ahead of its leader
-    refuses (fork refusal), and promote() re-raises rather than serving
-    the forked history as if it were clean."""
-    import os
-
-    import pytest as _pytest
-
-    from proteus_spark.sources import minilog
-
-    topic = str(tmp_path / "topic")
-    _hand_topic(topic, {0: 5})
-    rep = str(tmp_path / "replica")
-    with minilog.Broker(topic) as leader:
-        f = minilog.Follower(leader.host, leader.port, rep, partitions=1)
-        f.catch_up()
-    # unclean restart: the leader's store loses its only segment
-    seg = minilog._segment_files(topic, 0)[-1]
-    os.remove(seg)
-    with minilog.Broker(topic) as reborn:
-        f2 = minilog.Follower(reborn.host, reborn.port, rep, partitions=1)
-        with _pytest.raises(RuntimeError, match="refusing to fork"):
-            f2.poll_once()
-        f2.error = RuntimeError("refusing to fork history (recorded)")
-        with _pytest.raises(RuntimeError, match="refusing to fork"):
-            f2.promote()
-
-
-def test_stream_consumer_resumes_on_promoted_replica(spark, tmp_path):
-    """Failover END-TO-END through the Spark reader: a checkpointed
-    stream consumer drains the leader, the topic then grows, the
-    follower replicates the delta, the leader dies, and the SAME
-    checkpoint resumes against the PROMOTED replica — offsets are
-    per-partition line indices, identical on leader and replica by
-    construction, so the consumer delivers exactly the new records (no
-    re-delivery, no gaps). This is the property replication exists for:
-    a broker is interchangeable with its replica mid-consumption."""
-    from proteus_spark.sources import minilog
-
-    topic = str(tmp_path / "topic")
-    _hand_topic(topic, {0: 10, 1: 8})
-    rep = str(tmp_path / "replica")
-    ckpt = str(tmp_path / "ckpt")
-    minilog.register_log_datasource(spark)
-    rows = []
-
-    def consume(host, port):
-        q = (
-            spark.readStream.format(minilog.FORMAT_NAME)
-            .option("path", topic)
-            .option("partitions", "2")
-            .option("brokerHost", host)
-            .option("brokerPort", str(port))
-            .load()
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(
-                lambda bdf, e: rows.extend(r["value"] for r in bdf.collect())
-            )
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    leader = minilog.Broker(topic).start()
-    try:
-        f = minilog.Follower(leader.host, leader.port, rep, partitions=2)
-        f.catch_up()
-        consume(leader.host, leader.port)  # phase 1: drain via the leader
-        assert len(rows) == 18
-        _hand_topic(topic, {0: 5}, start=10)  # the topic grows
-        f.catch_up()  # replica captures the delta before the crash
-    finally:
-        leader.stop()  # leader dies
-    # the leader's STORE loses the delta segment too — the only copy of
-    # records 10-14 is now the replica, so phase 2 passing proves the
-    # consumer read them over the wire from the promoted broker, not
-    # from the filesystem path option
-    import os as _os
-
-    _os.remove(minilog._segment_files(topic, 0)[-1])
-    with f.promote() as promoted:
-        # same checkpoint, new broker: exactly the delta arrives.
-        # NOTE the reader's offset planning goes through the broker's
-        # `ends` op — the promoted replica serves it from its own store.
-        consume(promoted.host, promoted.port)
-    assert len(rows) == 23
-    assert sorted(rows) == sorted(
-        [f"v0-{i}" for i in range(15)] + [f"v1-{i}" for i in range(8)]
-    )
-
-
-def test_corpus_source_orc_roundtrip(spark, sf_dir, tmp_path):
-    """ORC corpus ingest: self-describing columnar format (schema
-    optional); an explicit schema acts as a projection/validation
-    contract — extra columns in the files are pruned away."""
-    from proteus_spark.sources.batch import corpus_source
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(50)
-    path = str(tmp_path / "corpus_orc")
-    docs.write.orc(path)  # writes all 5 columns
-    df = corpus_source(spark, path, fmt="orc")
-    assert df.count() == 50
-    assert set(df.columns) == set(docs.columns)
-    pruned = corpus_source(
-        spark, path, fmt="orc", schema="doc_id long, text string"
-    )
-    assert pruned.columns == ["doc_id", "text"]
-    got = {r["doc_id"]: r["text"] for r in pruned.collect()}
-    assert got == {r["doc_id"]: r["text"] for r in docs.collect()}
-
-
 def test_minilog_offset_discovery_is_index_served(spark, tmp_path, monkeypatch):
     """r11: producer-written count index (the Kafka model — the broker
     side knows its own end offsets). stage_topic writes
@@ -1810,34 +1573,6 @@ def test_minilog_offset_discovery_is_index_served(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(minilog, "_count_lines", boom)
     assert sum(minilog.end_offsets(topic, 4).values()) == 50
-
-
-def test_minilog_follower_persists_replica_count_index(spark, tmp_path):
-    """A Follower learns each replicated segment's count from the fetch
-    header it already received; it must persist that as
-    _replica-counts.json so the replica's own offset discovery (and its
-    restart's end_offsets) is index-served too."""
-    from proteus_spark.sources import minilog
-
-    df = spark.createDataFrame(
-        [(str(i), f"v{i}") for i in range(30)], "key string, value string"
-    )
-    topic = str(tmp_path / "leader")
-    minilog.stage_topic(df, topic, partitions=2)
-    replica = str(tmp_path / "replica")
-    with minilog.Broker(topic) as b:
-        f = minilog.Follower(b.host, b.port, replica, partitions=2)
-        moved = f.poll_once()
-        assert moved == 30
-    side = minilog._producer_counts(replica, {})
-    segs = {
-        f"p={p}/{fp.rsplit('/', 1)[-1]}"
-        for p in range(2)
-        for fp in minilog._segment_files(replica, p)
-    }
-    assert segs and segs == set(side)
-    assert sum(side.values()) == 30
-    assert sum(minilog.end_offsets(replica, 2).values()) == 30
 
 
 def test_log_datasource_pickles_without_module_reference(spark, tmp_path):
