@@ -1105,15 +1105,20 @@ class GrpcQueryServer:
 # ---------------------------------------------------------------------------
 
 
+# How long a client read waits for the server before it gives up.
+_READ_TIMEOUT_S = 30.0
+
+
 class _H2Client:
     """Minimal h2c prior-knowledge client for the call_* helpers: one
     request per connection (the tests that need multiplexing drive
-    streams by hand or use curl/nghttp)."""
+    streams by hand or use curl/nghttp). ``timeout`` bounds each socket
+    read."""
 
-    def __init__(self, host: str, port: int):
+    def __init__(self, host: str, port: int, timeout: float = _READ_TIMEOUT_S):
         import socket
 
-        self.sock = socket.create_connection((host, port), timeout=30)
+        self.sock = socket.create_connection((host, port), timeout=timeout)
         self.rf = self.sock.makefile("rb")
         self.enc = HpackEncoder()
         self.dec = HpackDecoder()
@@ -1212,8 +1217,11 @@ class _H2Client:
         self.sock.close()
 
 
-def _grpc_call(host: str, port: int, method: str, req: bytes):
-    cli = _H2Client(host, port)
+def _grpc_call(
+    host: str, port: int, method: str, req: bytes,
+    timeout: float = _READ_TIMEOUT_S,
+):
+    cli = _H2Client(host, port, timeout)
     try:
         _hdrs, data, trailers = cli.request(method, wire.frame(req))
     finally:
@@ -1256,15 +1264,21 @@ def call_query_sql(
     view: str | None = None,
     updates_timeout: float | None = None,
 ) -> list[dict]:
+    """One bidi ``Query``. With ``updates_timeout`` the server stays
+    silent for up to that quiet window after its last push before it
+    closes the stream, so the client's reads wait the window (as the
+    server clamps it) on top of the usual read timeout."""
     qreq: dict = {"query": {"query_sql": {"queryStr": sql}}}
     if view is not None:
         qreq["metadata"] = {"view": view}
+    timeout = _READ_TIMEOUT_S
     if updates_timeout is not None:
         qreq.setdefault("metadata", {})["updates_timeout"] = str(
             updates_timeout
         )
+        timeout += clamp_updates_timeout(updates_timeout)
     req = wire.encode_request_stream_record({"queryRequest": qreq})
-    frames = _grpc_call(host, port, "Query", req)
+    frames = _grpc_call(host, port, "Query", req, timeout)
     return [wire.decode_response_stream_record(f) for f in frames]
 
 

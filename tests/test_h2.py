@@ -727,6 +727,35 @@ def test_grpc_query_with_live_view_pushes_updatedelta(spark, engine):
         view.stop()
 
 
+def test_client_read_timeout_outlasts_the_quiet_window(monkeypatch):
+    """A ``Query`` with an ``updates_timeout`` window may leave the
+    connection silent for the whole window after its last push, so the
+    client's read timeout is the window (clamped as the server clamps
+    it) plus the fixed 30 s; every other call keeps the fixed 30 s. The
+    derived value reaches the socket."""
+    seen: list[float] = []
+
+    def record(host, port, method, req, timeout=h2._READ_TIMEOUT_S):
+        seen.append(timeout)
+        return []
+
+    monkeypatch.setattr(h2, "_grpc_call", record)
+    h2.call_query_sql("h", 1, "SELECT 1", view="live", updates_timeout=30)
+    h2.call_query_sql("h", 1, "SELECT 1", updates_timeout=1e9)
+    h2.call_query_sql("h", 1, "SELECT 1")
+    h2.call_subscribe("h", 1, "SELECT 1")
+    assert seen == [60.0, 330.0, 30.0, 30.0]
+
+    with socket.socket() as listener:
+        listener.bind(("127.0.0.1", 0))
+        listener.listen(1)
+        cli = h2._H2Client(*listener.getsockname(), timeout=60.0)
+        try:
+            assert cli.sock.gettimeout() == 60.0
+        finally:
+            cli.close()
+
+
 def test_stalled_h2_consumer_cannot_block_view_commit(spark, engine):
     """A gRPC subscriber whose flow-control window is ZERO (never opens
     it) must stall ONLY the server's per-stream handler thread in

@@ -46,6 +46,9 @@ def test_sum_view_subscriptions_and_versions(spark, sf_dir):
         a = {r["user_id"]: round(r["value_sum"], 4) for r in snap.collect()}
         b = {r["user_id"]: round(r["value_sum"], 4) for r in batch.collect()}
         assert a == b
+        # progress events reach Python listeners asynchronously, after
+        # processAllAvailable returned: drain the bus before counting
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
         rep = listener.report()
         key = next((k for k in rep if "t_sum_sub" in k), None)
         assert key is not None and rep[key]["batches"] >= 3
@@ -2555,9 +2558,13 @@ def test_merge_skips_snapshot_resolution_without_derived(spark, monkeypatch):
     """Optimization r16 (guide §1): a view with NO derived views must not
     resolve a snapshot per micro-batch — the per-batch read.parquet
     resolution + persist churn served nobody (readers memoize their own
-    snapshot per version). The first reader pays exactly one collapse."""
+    snapshot per version). The first reader pays exactly one collapse.
+    The views are kept off the driver-resident path, whose reads never
+    collapse the LSM."""
+    from proteus_spark.streaming import views
     from proteus_spark.streaming.views import _BucketedState
 
+    monkeypatch.setattr(views, "_RESIDENT_ROWS", 0)
     calls = {"read": 0}
     orig = _BucketedState.read
 
@@ -2792,7 +2799,12 @@ def test_subscriber_dispatch_executes_delta_once_and_releases(spark):
     per-batch delta is checkpointed ONCE — the state commit's write and
     every subscriber callback consume the same materialized blocks instead
     of each re-executing the micro-batch plan — and the checkpoint is
-    released after the fan-out (no per-batch block accretion)."""
+    released after the fan-out (no per-batch block accretion). The view
+    is kept off the driver-resident path, which collects the delta
+    instead of checkpointing it."""
+    import unittest.mock as mock
+
+    from proteus_spark.streaming import views
     from proteus_spark.streaming.views import _BucketedState
 
     jobs = {"n": 0}
@@ -2813,9 +2825,8 @@ def test_subscriber_dispatch_executes_delta_once_and_releases(spark):
     )
     view.subscribe(lambda delta, epoch: seen.append(delta.count()))
     before = _persisted_ids(spark)
-    import unittest.mock as mock
-
-    with mock.patch.object(_BucketedState, "commit_delta", counting_commit):
+    with mock.patch.object(_BucketedState, "commit_delta", counting_commit), \
+            mock.patch.object(views, "_RESIDENT_ROWS", 0):
         try:
             b = spark.createDataFrame(
                 [(1, None, 1.0), (2, None, 2.0)],
@@ -2831,3 +2842,288 @@ def test_subscriber_dispatch_executes_delta_once_and_releases(spark):
             )
         finally:
             view.stop()
+
+
+def _assert_copy_matches_lsm(view):
+    """The snapshot equals the LSM's own collapse: same column names and
+    types, same rows."""
+    from collections import Counter
+
+    snap, lsm = view.snapshot(), view._state.read()
+    assert [(f.name, f.dataType) for f in snap.schema] == [
+        (f.name, f.dataType) for f in lsm.schema
+    ]
+    assert Counter(map(tuple, snap.collect())) == Counter(
+        map(tuple, lsm.collect())
+    )
+
+
+def _compacted(view) -> bool:
+    """Whether the last commit folded some bucket's chain to a new base."""
+    ms = view._state.manifests
+    v = len(ms) - 1
+    return v > 0 and any(
+        chain == (v,) and b in ms[v - 1] for b, chain in ms[v].items()
+    )
+
+
+@pytest.mark.parametrize("mode", ["append", "cdc"])
+def test_resident_copy_equals_lsm_after_every_commit(spark, mode):
+    """A small SumView serves a driver-resident copy that the commit path
+    updates from each batch's delta. After every commit it must equal the
+    LSM's collapse — with ``_ts`` folded as max, negative contributions
+    (down votes; DELETE records in cdc mode), a replayed epoch and a
+    compacting commit — and append-mode subscribers still get each
+    touched group's new total."""
+    from datetime import datetime
+
+    def ts(s):
+        return datetime(2024, 1, 1, 0, 0, s)
+
+    if mode == "append":
+        schema = "k bigint, vote double, _ts timestamp"
+        batches = [
+            [(k, 1.0, ts(k % 7)) for k in range(40)] + [(3, 1.0, ts(9))],
+            [(1, -1.0, ts(20)), (2, 2.5, ts(1)), (50, 1.0, ts(21))],
+            [(1, -1.0, ts(22)), (50, None, ts(23)), (51, None, ts(24))],
+            [(k, -0.5, ts(30)) for k in range(0, 40, 3)],
+            [(2, 4.0, ts(31)), (60, 1.0, None)],
+        ]
+        agg = "vote"
+    else:
+        schema = "k bigint, old_value double, new_value double, _ts timestamp"
+        batches = [
+            [(k, None, float(k), ts(k % 7)) for k in range(40)],
+            [(1, 1.0, 5.0, ts(20)), (2, 2.0, None, ts(21))],  # 2 DELETEd
+            [(3, 3.0, None, ts(22)), (70, None, 1.5, ts(23))],
+            [(k, float(k), float(k + 1), ts(30)) for k in range(0, 40, 3)],
+            [(70, 1.5, None, ts(31)), (71, None, 2.0, None)],
+        ]
+        agg = "new_value"
+    view = SumView(
+        spark, stream=None, group_by="k", agg_attr=agg,
+        name=f"t_resident_{mode}", mode=mode,
+    )
+    published: list[dict] = []
+    view.subscribe(
+        lambda d, e: published.append(
+            {r["k"]: r[f"{agg}_sum"] for r in d.collect()}
+        )
+    )
+    compacted = False
+    try:
+        for epoch, rows in enumerate(batches):
+            batch = spark.createDataFrame(rows, schema)
+            view._on_batch(batch, epoch)
+            assert view._copy is not None and view.version() == epoch
+            _assert_copy_matches_lsm(view)
+            compacted = compacted or _compacted(view)
+            if mode == "append":
+                totals = {
+                    r["k"]: r[f"{agg}_sum"] for r in view._state.read().collect()
+                }
+                keys = {r[0] for r in rows}
+                assert published[-1] == {k: totals[k] for k in keys}
+        assert compacted
+        # a replayed epoch changes neither the version nor the rows, but
+        # is dispatched again (at-least-once)
+        n = len(published)
+        view._on_batch(spark.createDataFrame(batches[-1], schema), len(batches) - 1)
+        assert view.version() == len(batches) - 1
+        assert len(published) == n + 1
+        _assert_copy_matches_lsm(view)
+    finally:
+        view.stop()
+
+
+def test_resident_copy_rebuilt_by_recover(spark, tmp_path):
+    """A restart over ``root=`` rebuilds the resident copy from the LSM at
+    the recovered version, and later commits keep it equal."""
+    root = str(tmp_path / "resident_root")
+    schema = "k bigint, vote bigint"
+
+    def mk():
+        return SumView(
+            spark, stream=None, group_by="k", agg_attr="vote",
+            name="t_resident_recover", root=root,
+        )
+
+    first = mk()
+    first._on_batch(spark.createDataFrame([(k, k) for k in range(20)], schema), 0)
+    first._on_batch(spark.createDataFrame([(1, 5), (30, -2)], schema), 1)
+    first.stop(cleanup=False)
+    second = mk()
+    try:
+        assert second._copy is not None and second.version() == 1
+        _assert_copy_matches_lsm(second)
+        second._on_batch(spark.createDataFrame([(1, 5), (2, -2)], schema), 1)
+        assert second.version() == 1  # replay across the restart
+        second._on_batch(spark.createDataFrame([(1, 5), (2, -2)], schema), 2)
+        assert second.version() == 2
+        _assert_copy_matches_lsm(second)
+        assert {r["k"]: r["vote_sum"] for r in second.snapshot().collect()}[1] == 11
+    finally:
+        second.stop()
+
+
+def test_sum_view_over_the_resident_bound_falls_back_to_persisted(
+    spark, monkeypatch
+):
+    """A state that grows past the row bound drops its resident copy for
+    the rest of the view's life and serves the persisted memo, still
+    equal to the LSM."""
+    from proteus_spark.streaming import views
+
+    monkeypatch.setattr(views, "_RESIDENT_ROWS", 5)
+    view = SumView(
+        spark, stream=None, group_by="k", agg_attr="vote", name="t_bound",
+    )
+    schema = "k bigint, vote bigint"
+    try:
+        view._on_batch(spark.createDataFrame([(k, 1) for k in range(4)], schema), 0)
+        assert view._copy is not None
+        _assert_copy_matches_lsm(view)
+        assert not view.snapshot().is_cached
+        view._on_batch(spark.createDataFrame([(k, 1) for k in range(3, 8)], schema), 1)
+        assert view._copy is None and view.version() == 1
+        _assert_copy_matches_lsm(view)
+        assert view.snapshot().is_cached  # the persisted memo
+        view._on_batch(spark.createDataFrame([(0, 1)], schema), 2)
+        assert view._copy is None and view.version() == 2
+        _assert_copy_matches_lsm(view)
+    finally:
+        view.stop()
+
+
+def test_resident_snapshot_handed_out_keeps_its_version(spark):
+    """A frame taken from ``snapshot()`` at version v and registered with
+    ``engine.register_view`` still returns v's rows after ``retain + 1``
+    later commits, when v is out of the LSM's retention window: a
+    resident snapshot is a local relation, not a plan over the LSM."""
+    from proteus_spark.engine import Engine
+
+    eng = Engine(spark)
+    view = SumView(
+        spark, stream=None, group_by="k", agg_attr="vote",
+        name="t_handed_out", retain=2,
+    )
+    schema = "k bigint, vote bigint"
+    try:
+        view._on_batch(spark.createDataFrame([(1, 1), (2, 2)], schema), 0)
+        assert view._copy is not None
+        eng.register_view("handed_out", view.snapshot())
+        want = sorted(map(tuple, eng.query("SELECT * FROM handed_out").collect()))
+        assert want == [(1, 1), (2, 2)]
+        for epoch in range(1, view._state.retain + 2):
+            view._on_batch(spark.createDataFrame([(1, 10)], schema), epoch)
+        with pytest.raises(ValueError, match="evicted"):
+            view._state.read(version=0)
+        got = sorted(map(tuple, eng.query("SELECT * FROM handed_out").collect()))
+        assert got == want
+    finally:
+        view.stop()
+
+
+def test_small_sum_view_serves_reads_without_the_collapse(spark):
+    """Job-count guard for the read path of a small SumView, counted
+    through ``statusTracker`` job groups: a point lookup over the
+    snapshot runs no Spark job, the MV-substituted top-k runs one, and a
+    non-compacting append commit runs at most 3 (the batch aggregate's
+    map stage, the collect that feeds the copy and the LSM, the write).
+    Putting the per-version collapse back on the read path fails it."""
+    from proteus_spark.engine import Engine
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs(name, fn):
+        sc.setJobGroup(name, name)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(tracker.getJobIdsForGroup(name))
+
+    schema = "k bigint, vote bigint"
+    base = spark.createDataFrame([(k % 2000, 1) for k in range(6000)], schema)
+    base.createOrReplaceTempView("t_guard_votes")
+    view = SumView(
+        spark, stream=None, group_by="k", agg_attr="vote", name="t_guard",
+    )
+    eng = Engine(spark)
+    defining = "SELECT k, SUM(vote) AS vote_sum FROM t_guard_votes GROUP BY k"
+    eng.register_materialized("guard_mv", defining, provider=view.snapshot)
+    try:
+        view._on_batch(base, 0)
+        delta = spark.createDataFrame([(7, 1), (8, -1), (9, 1)], schema)
+        n_commit = jobs("t_guard_commit", lambda: view._on_batch(delta, 1))
+        assert not _compacted(view)
+        assert n_commit <= 3, n_commit
+        eng.register_view("t_guard_view", view.snapshot())
+        rows: list = []
+        n_point = jobs(
+            "t_guard_point",
+            lambda: rows.extend(
+                eng.query("SELECT * FROM t_guard_view WHERE k = 7").collect()
+            ),
+        )
+        assert [tuple(r) for r in rows] == [(7, 4)]
+        assert n_point == 0
+        top: list = []
+        n_topk = jobs(
+            "t_guard_topk",
+            lambda: top.extend(
+                eng.query(defining + " ORDER BY vote_sum DESC LIMIT 3").collect()
+            ),
+        )
+        assert eng.mvs.last_substitution == "guard_mv"
+        assert [r["vote_sum"] for r in top] == [4, 4, 3]
+        assert n_topk == 1
+    finally:
+        view.stop()
+        spark.catalog.dropTempView("t_guard_votes")
+        spark.catalog.dropTempView("t_guard_view")
+
+
+def test_resident_version_never_runs_ahead_of_snapshot(spark):
+    """Readers racing the commit path: a reader that sees ``version() ==
+    v`` gets at least v's rows from ``snapshot()``. Every batch adds 1 to
+    key 0, so version v holds the total v + 1. More reader threads than
+    cores and a short switch interval make a torn publication likely to
+    show."""
+    import sys
+    import threading
+
+    view = SumView(
+        spark, stream=None, group_by="k", agg_attr="vote", name="t_publish",
+    )
+    schema = "k bigint, vote bigint"
+    view._on_batch(spark.createDataFrame([(0, 1), (1, 1)], schema), 0)
+    stop = threading.Event()
+    torn: list[tuple[int, int]] = []
+    reads = [0]
+
+    def reader():
+        while not stop.is_set():
+            v = view.version()
+            rows = view.snapshot().filter(F.col("k") == 0).collect()
+            if rows[0]["vote_sum"] < v + 1:
+                torn.append((v, rows[0]["vote_sum"]))
+            reads[0] += 1
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    threads = [threading.Thread(target=reader, daemon=True) for _ in range(6)]
+    try:
+        for t in threads:
+            t.start()
+        for epoch in range(1, 6):
+            view._on_batch(spark.createDataFrame([(0, 1)], schema), epoch)
+    finally:
+        stop.set()
+        sys.setswitchinterval(interval)
+        for t in threads:
+            t.join(timeout=60)
+        view.stop()
+    assert not any(t.is_alive() for t in threads)
+    assert reads[0] > 0 and not torn, torn
